@@ -233,7 +233,13 @@ def minhash_band_buckets(text_col: Column, k: int = 32,
     64-bit accidental collision merges two buckets and can only ADD
     candidates, which exact verification then scores — the oracle's
     recall-1.0 gate is unaffected). NULL for un-shingle-able docs,
-    like :func:`minhash_signature`."""
+    like :func:`minhash_signature`. Raises ``ValueError`` at call
+    time unless ``bands`` divides ``k`` — the kernel reshapes the k
+    minhash values into ``(bands, k // bands)``."""
+    if k <= 0 or bands <= 0 or k % bands:
+        raise ValueError(
+            f"minhash banding needs positive k and bands, with bands "
+            f"dividing k; got k={k}, bands={bands}")
     rows = k // bands
     a = np.array([((2 * i + 1) * 2654435761) % _MERSENNE31 or 1
                   for i in range(k)], dtype=np.int64)
@@ -374,7 +380,8 @@ def minhash_lsh_candidates(
 
     Scale path: the only exchanges are the groupBy/join on
     (band, band_hash); NULL signatures (un-shingle-able docs) never
-    enter banding, so there is no universal empty-doc bucket.
+    enter banding, so there is no universal empty-doc bucket. Raises
+    ``ValueError`` at call time unless ``bands`` divides ``k``.
     """
     sigb = minhash_band_buckets(F.col(text_col), k, n_shingle, bands)
     exploded = (df.select(F.col(id_col), sigb.alias("bb"))

@@ -31,7 +31,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -468,18 +468,25 @@ def parse_lines(
     out_passengers = [c for c in all_rows.columns
                       if c in lines.columns and c != line_col]
 
-    kept = all_rows.filter(F.col("reject_reason").isNull()) \
-                   .drop("reject_reason")
-    rejects = all_rows.filter(F.col("reject_reason").isNotNull()) \
-                      .select(*out_passengers, "reject_reason")
-
-    if require_qid:
-        qid_ok = F.col("qid").isNotNull() & (F.col("qid") != "")
-        parsed = kept.filter(qid_ok)
-        qid_rejects = kept.filter(~qid_ok).select(
-            *out_passengers, F.lit("no_qid").alias("reject_reason"))
-        rejects = rejects.unionByName(qid_rejects)
-    else:
-        parsed = kept
+    reject = is_reject(require_qid)
+    parsed = all_rows.filter(~reject).drop("reject_reason")
+    # a grok reject keeps its reason; the only other reject is qid-less
+    rejects = all_rows.filter(reject).select(
+        *out_passengers,
+        F.coalesce(F.col("reject_reason"), F.lit("no_qid"))
+        .alias("reject_reason"))
 
     return ParseResult(parsed=parsed, rejects=rejects, all_rows=all_rows)
+
+
+def is_reject(require_qid: bool = True) -> Column:
+    """The reject rule over :func:`parse_all` output: a grok reject
+    (``reject_reason`` set) or, with ``require_qid``, a line with no
+    queue id. :func:`parse_lines` splits parsed/rejects on it and the
+    pipeline counts rejects with it, so the rule lives here once.
+    Never NULL, so ``~is_reject()`` is exactly the kept rows."""
+    grok_reject = F.col("reject_reason").isNotNull()
+    if not require_qid:
+        return grok_reject
+    qid_ok = F.col("qid").isNotNull() & (F.col("qid") != "")
+    return grok_reject | ~qid_ok

@@ -319,7 +319,8 @@ def ivf_topk(
         def assign(vecs: pd.Series) -> pd.Series:
             if len(vecs) == 0:
                 return pd.Series([], dtype=object)
-            mat = np.array(_null_safe(vecs.tolist()), dtype=np.float64)
+            mat = np.array(_null_safe(vecs.tolist(), cmat.shape[1]),
+                           dtype=np.float64)
             mat = mat / np.maximum(
                 np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
             sims = mat @ cmat.T                      # (n, C)

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .assemble import DOC_FIELDS
@@ -39,6 +39,8 @@ class StateStore:
 
     def __init__(self, path: str):
         self.path = path
+        # schema of the last read, reused by the next one (see read)
+        self._schema = None
 
     def _fs(self, spark: SparkSession):
         sc = spark.sparkContext
@@ -146,6 +148,7 @@ class StateStore:
             return False
         base = self.path.rstrip("/")
         tmp, trash = base + "__compact_tmp", base + "__compact_old"
+        self._schema = None
         (state.repartition("sink", "route_date")
          .write.mode("overwrite")
          .partitionBy("sink", "route_date")
@@ -167,16 +170,36 @@ class StateStore:
         fs.delete(p_trash, True)
         return True
 
+    def _has_files(self, spark: SparkSession) -> bool:
+        """Whether the root holds anything a parquet read would list
+        (Spark skips names starting with ``_`` or ``.``)."""
+        _, hpath, fs = self._fs(spark)
+        return any(not st.getPath().getName().startswith(("_", "."))
+                   for st in fs.listStatus(hpath))
+
     def read(self, spark: SparkSession) -> Optional[DataFrame]:
-        if not self.exists(spark):
+        """The committed docs, or None for an absent or empty store.
+
+        An empty root (only the preflight probe ran) is answered from
+        one directory listing, not from a failed schema inference. The
+        inferred schema is kept and reused by later reads: a batch
+        reads state twice (lookup, then upsert), and each inference is
+        a Spark job over the parquet footers. An upsert keeps it only
+        when it wrote the same columns with the same types, and
+        ``compact`` drops it."""
+        if not self.exists(spark) or not self._has_files(spark):
             return None
+        reader = spark.read
+        if self._schema is not None:
+            reader = reader.schema(self._schema)
         try:
-            return spark.read.parquet(self.path)
-        except Exception as exc:  # existing-but-empty dir (e.g. only the
-            # preflight probe ran): no committed state yet
+            df = reader.parquet(self.path)
+        except Exception as exc:  # only hidden or empty entries
             if "UNABLE_TO_INFER_SCHEMA" in str(exc):
                 return None
             raise
+        self._schema = df.schema
+        return df
 
     def lookup(self, spark: SparkSession, keys: DataFrame,
                dates: Optional[list[str]] = None) -> Optional[DataFrame]:
@@ -213,6 +236,27 @@ class StateStore:
         default ``static`` mode the overwrite would truncate the WHOLE
         table while the lazy carry rows still read from it — total loss
         of untouched partitions.
+
+        When state exists, ``incoming`` is materialized ONCE with
+        ``localCheckpoint(eager=True)`` before any action: the
+        touched-date collect, the detect_noop anti-join, the carry
+        union and the write all read that one copy, so the upstream
+        parse→fold runs once per batch (a lazy input re-runs it for
+        every action), and the write stores exactly the docs the noop
+        test compared. ``localCheckpoint``, not ``persist``:
+        a cached plan keeps its full shuffle partition count because
+        AQE does not coalesce it, so the dynamic-overwrite write would
+        emit one small file per shuffle partition per touched
+        partition; the checkpoint runs the AQE-coalesced plan and the
+        write keeps the lazy plan's file count. The checkpoint holds
+        one batch's docs in executor block storage; a lost block fails
+        the attempt and the batch is replayed whole
+        (``run_batch_with_retry``). The touched dates are observed by
+        the job that builds the checkpoint, so they cost no job of
+        their own; the detect_noop anti-join reads the copy inside the
+        one aggregate that finds the changed partitions. The first
+        upsert into an empty store has a single consumer and writes
+        lazily.
 
         ``detect_noop=True`` (the reference's ``detect_noop: true``
         bulk-update option, lib/logship.js:370) suppresses writes at
@@ -256,11 +300,18 @@ class StateStore:
         are possible.
         """
         state = self.read(spark)
+        known = self._schema if state is not None else None
         emptied_parts: list[str] = []
         migrated_only: set[str] = set()
         if state is not None:
-            touched = [r["route_date"] for r in
-                       incoming.select("route_date").distinct().collect()]
+            # every action below reads this one materialization, so the
+            # upstream exchange + fold runs once per batch; the touched
+            # dates are observed by the job that builds it
+            seen = Observation("upsert_touched")
+            incoming = (incoming.observe(
+                seen, F.collect_set("route_date").alias("touched"))
+                .localCheckpoint(eager=True))
+            touched = seen.get["touched"]
             scoped = state.filter(F.col("route_date").isin(touched))
             if detect_noop:
                 pkey = F.concat_ws("\x00", F.col("sink"),
@@ -274,14 +325,16 @@ class StateStore:
                 # changed-or-new docs: no committed row with same hash
                 changed = inc_keyed.join(
                     st_keyed.select("qid", "_h"), ["qid", "_h"],
-                    "left_anti").localCheckpoint(eager=True)
-                inc_parts = {r["_p"] for r in
-                             changed.select("_p").distinct().collect()}
-                # ...plus the OLD partitions of those qids (migration)
-                old_side = st_keyed.join(
-                    changed.select("qid").distinct(), "qid", "inner")
-                old_parts = {r["_p"] for r in
-                             old_side.select("_p").distinct().collect()}
+                    "left_anti")
+                # one action: the changed docs' partitions plus the OLD
+                # partitions of those qids (migration)
+                parts = (changed.join(
+                    st_keyed.select("qid", F.col("_p").alias("_old")),
+                    "qid", "left")
+                    .agg(F.collect_set("_p").alias("inc"),
+                         F.collect_set("_old").alias("old"))
+                    .first())
+                inc_parts, old_parts = set(parts["inc"]), set(parts["old"])
                 changed_parts = sorted(inc_parts | old_parts)
                 if not changed_parts:
                     return False
@@ -305,12 +358,16 @@ class StateStore:
         conf_key = "spark.sql.sources.partitionOverwriteMode"
         prev = spark.conf.get(conf_key, "static")
         spark.conf.set(conf_key, "dynamic")
+        self._schema = None
         try:
             (incoming.write.mode("overwrite")
              .partitionBy("sink", "route_date")
              .parquet(self.path))
         finally:
             spark.conf.set(conf_key, prev)
+        if known is not None and _layout(incoming.schema) == _layout(known):
+            # same files' schema: the next read would infer ``known``
+            self._schema = known
         if emptied_parts:
             sc = spark.sparkContext
             jvm = sc._jvm  # type: ignore[attr-defined]
@@ -322,6 +379,14 @@ class StateStore:
                 fs = part_dir.getFileSystem(conf)
                 fs.delete(part_dir, True)
         return True
+
+
+def _layout(schema) -> list[tuple[str, str]]:
+    """The data columns a state write stores, in file order: names and
+    types without nullability (a parquet read makes every field
+    nullable)."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields
+            if f.name not in ("sink", "route_date")]
 
 
 def merge_with_state(

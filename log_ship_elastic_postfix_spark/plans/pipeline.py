@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 
 from ..operators import assemble as assemble_mod
 from ..operators import enrich, route
-from ..operators.parse import ParseResult, parse_lines
+from ..operators.parse import ParseResult, is_reject, parse_lines
 from ..operators.state import StateStore, merge_with_state
-from ..sources.bookmark import BookmarkStore, partition_lineage
+from ..sources.bookmark import BookmarkStore
 from ..sources.pages import pages_to_lines, read_pages, with_batch_seq
 
 # deterministic clock for year inference in tests/bench; production
@@ -66,10 +66,16 @@ class BatchResult:
     manifest: Optional[dict] = None
 
 
+# line length passenger: carries the manifest's byte lineage through
+# the parse (see run_batch)
+LINE_BYTES = "_line_bytes"
+
+
 def parse_stage(lines: DataFrame, cfg: PipelineConfig) -> ParseResult:
     # only the order keys ride through the parse UDF — url/lang/text
     # passengers would be Arrow-serialized both ways for nothing
-    passengers = [c for c in cfg.order_cols if c in lines.columns]
+    passengers = [c for c in (*cfg.order_cols, LINE_BYTES)
+                  if c in lines.columns]
     return parse_lines(lines, tz=cfg.tz, now=cfg.now,
                        passengers=passengers)
 
@@ -119,25 +125,52 @@ def run_batch(
     if "batch_seq" not in lines.columns:
         lines = lines.withColumn("batch_seq", F.lit(batch_seq))
 
+    lineage = bookmark is not None and collect_lineage
+    if lineage:
+        lines = lines.withColumn(LINE_BYTES, F.length("line"))
     pr = parse_stage(lines, cfg)
+    rejects = pr.rejects.drop(LINE_BYTES)
 
     # single-pass rule: the scan+grok (the pipeline's most expensive
     # stage) runs ONCE per batch. Everything downstream — the distinct
-    # dates for state pruning, the fold input, the manifest counts —
-    # reads the persisted grok output; round 1 re-ran the full parse
+    # dates for state pruning, the fold input, the manifest counts and
+    # lineage — reads the persisted grok output; round 1 re-ran the full parse
     # 3-4× per batch for these (at 100 TB: 3-4 redundant table scans).
     # Persisted data is batch-bounded, MEMORY_AND_DISK by default.
+    # The same rule holds for the fold: StateStore.upsert checkpoints
+    # the routed docs once, and its noop anti-join, carry union and
+    # write all read that copy instead of re-running exchange + fold.
     multi_consumer = state is not None or bookmark is not None
     if multi_consumer and pr.all_rows is not None:
         pr.all_rows.persist()
 
     try:
+        # one aggregate over the persisted grok output answers the
+        # parsed lines' distinct dates (state pruning, needed before
+        # the fold) and the manifest's counts and lineage, grouped by
+        # input partition when lineage is on (the parse is narrow, so
+        # its partitions are the input's). The dates ride as structs so
+        # a NULL date is kept like distinct() keeps it.
+        kept = ~is_reject()
+        aggs = []
+        if state is not None:
+            aggs.append(F.collect_set(F.when(kept, F.struct(
+                F.substring("date", 1, 10).alias("d")))).alias("dates"))
+        if bookmark is not None:
+            aggs += [F.count(F.lit(1)).alias("rows"),
+                     F.count_if(~kept).alias("rejects")]
+        if lineage:
+            aggs.append(F.sum(LINE_BYTES).alias("bytes"))
+            meta = (pr.all_rows.groupBy(
+                F.spark_partition_id().alias("partition_id"))
+                .agg(*aggs).collect())
+        else:
+            meta = [pr.all_rows.agg(*aggs).first()] if aggs else []
+
         state_docs = None
         if state is not None:
-            dates = [r["d"] for r in
-                     pr.parsed.select(
-                         F.substring("date", 1, 10).alias("d"))
-                     .distinct().collect()]
+            dates = [d["d"] for d in
+                     {d for r in meta for d in r["dates"]}]
             state_docs = state.lookup(spark, pr.parsed, dates=dates)
             if state_docs is not None:
                 # two consumers (continuation seeds + routing pins):
@@ -160,15 +193,18 @@ def run_batch(
         elif sink_path is not None:
             route.write_routed(routed, sink_path, typed=cfg.typed_sink)
         if rejects_path is not None:
-            route.write_rejects(pr.rejects, rejects_path)
+            route.write_rejects(rejects, rejects_path)
 
         if bookmark is not None:
             manifest = {
                 "batch_seq": batch_seq,
-                "lineage": partition_lineage(lines, size_col="line")
-                if collect_lineage else [],
-                "n_lines": pr.all_rows.count(),
-                "n_rejects": pr.rejects.count(),
+                "lineage": [{"partition_id": r["partition_id"],
+                             "rows": r["rows"], "bytes": r["bytes"]}
+                            for r in sorted(
+                                meta, key=lambda r: r["partition_id"])]
+                if lineage else [],
+                "n_lines": sum(r["rows"] for r in meta),
+                "n_rejects": sum(r["rejects"] for r in meta),
             }
             bookmark.commit(batch_seq, manifest)
     finally:
@@ -178,7 +214,7 @@ def run_batch(
             state_docs.unpersist()
 
     return BatchResult(batch_seq=batch_seq, docs=docs, routed=routed,
-                       rejects=pr.rejects, manifest=manifest)
+                       rejects=rejects, manifest=manifest)
 
 
 def run_batch_with_retry(

@@ -20,9 +20,6 @@ import os
 import tempfile
 from typing import Optional
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 
 class BookmarkStore:
     def __init__(self, path: str):
@@ -75,19 +72,3 @@ class BookmarkStore:
             return None
         with open(p) as fh:
             return json.load(fh)
-
-
-def partition_lineage(df: DataFrame, size_col: Optional[str] = None) -> list[dict]:
-    """Per-partition (rows, bytes) lineage for the manifest.
-
-    One narrow pass — ``spark_partition_id`` costs nothing; the agg is
-    partial+final over at most a few thousand partition ids.
-    """
-    size = (F.sum(F.length(F.col(size_col))) if size_col
-            else F.lit(None).cast("long"))
-    rows = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"), size.alias("bytes"))
-            .orderBy("partition_id")
-            .collect())
-    return [{"partition_id": r["partition_id"], "rows": r["rows"],
-             "bytes": r["bytes"]} for r in rows]

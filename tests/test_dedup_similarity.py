@@ -181,3 +181,26 @@ def test_textstats_basics(spark):
     fp2 = df2.select(textstats.fingerprint_md5(F.col("text")).alias("fp")) \
              .collect()[0]["fp"]
     assert fp2 == out[1]["fp"]
+
+
+def test_minhash_banding_rejects_non_divisible_k_at_call(spark):
+    """bands must divide k: the error is raised where the column or
+    frame is built, on the driver, before any job runs."""
+    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bands dividing k"):
+        dedup.minhash_band_buckets(F.col("text"), k=32, bands=5)
+    with pytest.raises(ValueError, match="bands dividing k"):
+        dedup.minhash_lsh_candidates(df, k=10, bands=4)
+
+
+def test_ivf_assign_all_null_batch(spark):
+    """An Arrow batch holding only NULL vectors is assigned with the
+    centroid width (zero vectors, score 0) instead of failing the
+    task."""
+    df = spark.createDataFrame(
+        [(i, None) for i in range(4)],
+        "vec_id long, embedding array<double>").coalesce(1)
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    got = similarity.ivf_topk(df, k=2, n_probe=2,
+                              centroids=cents).collect()
+    assert got and all(r["score"] == 0.0 for r in got)

@@ -178,6 +178,44 @@ def test_bookmark_resume(spark, small_pages, tmp_path):
     assert m["n_lines"] > 0 and isinstance(m["lineage"], list)
 
 
+def test_manifest_counts_match_counts(spark, small_pages, tmp_path):
+    """The manifest's line and reject counts, taken in one aggregate,
+    equal separate count()s of the grok output and of the rejects,
+    qid-less rejects included, and the hand-computed reject count."""
+    from log_ship_elastic_postfix_spark.plans.pipeline import parse_stage
+    lines = with_batch_seq(pages_to_lines(small_pages), 1)
+    pr = parse_stage(lines, CFG)
+    reasons = {r["reject_reason"] for r in pr.rejects.collect()}
+    assert "no_qid" in reasons and len(reasons) > 1
+
+    bm = BookmarkStore(str(tmp_path / "bm"))
+    run_batch(spark, lines, CFG, bookmark=bm, collect_lineage=False)
+    m = bm.read_manifest(0)
+    assert m["n_lines"] == pr.all_rows.count() == lines.count()
+    assert m["n_rejects"] == pr.rejects.count() == sum(
+        5 * SCENARIO_EXPECT[s][2] for s in range(10))
+
+
+def test_manifest_lineage_per_input_partition(spark, small_pages,
+                                              tmp_path):
+    """The manifest's lineage, taken from the persisted grok output,
+    equals a per-partition count and line-byte sum over the input,
+    ordered by partition id; the byte passenger stays out of the
+    rejects."""
+    lines = with_batch_seq(pages_to_lines(small_pages), 1)
+    bm = BookmarkStore(str(tmp_path / "bm"))
+    res = run_batch(spark, lines, CFG, bookmark=bm)
+    want = [r.asDict() for r in
+            lines.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count(F.lit(1)).alias("rows"),
+                 F.sum(F.length("line")).alias("bytes"))
+            .orderBy("partition_id").collect()]
+    m = bm.read_manifest(0)
+    assert len(want) > 1 and m["lineage"] == want
+    assert sum(p["rows"] for p in m["lineage"]) == m["n_lines"]
+    assert res.rejects.columns == ["batch_seq", "line_no", "reject_reason"]
+
+
 def _b36(n: int) -> str:
     digits = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ"
     if n == 0:
