@@ -436,7 +436,9 @@ def q_ann_topk_dot(spark, sf_dir):
 
     q_rows = (e.filter(F.col("vec_id") < 50).orderBy("vec_id")
               .select("vec_id", "q").collect())
-    q_mat = _np.array([r["q"] for r in q_rows], dtype=_np.int64)  # (Q, d)
+    q_live = [j for j, r in enumerate(q_rows) if r["q"] is not None]
+    q_mat = _np.array([q_rows[j]["q"] for j in q_live],
+                      dtype=_np.int64)                    # (Q', d)
     q_ids = F.array(*[F.lit(int(r["vec_id"])) for r in q_rows])
 
     # hintless on purpose: under `from __future__ import annotations`
@@ -446,8 +448,14 @@ def q_ann_topk_dot(spark, sf_dir):
     def _dots_vs_queries(nv):
         if len(nv) == 0:
             return _pd.Series([], dtype=object)
-        m = _np.array(nv.tolist(), dtype=_np.int64)       # (n, d)
-        return _pd.Series((m @ q_mat.T).tolist())         # (n, Q)
+        # a NULL vector on either side gives NULL dots, as DuckDB's
+        # list_dot_product does; both engines sort them last
+        live = nv.notna().to_numpy()
+        out = _np.full((len(nv), len(q_rows)), None, dtype=object)
+        if live.any() and q_live:
+            m = _np.array(nv[live].tolist(), dtype=_np.int64)  # (n', d)
+            out[_np.ix_(live, q_live)] = m @ q_mat.T           # (n', Q')
+        return _pd.Series(out.tolist())
 
     scored = (corpus
               .select("nbr_id", F.posexplode(

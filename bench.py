@@ -23,6 +23,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# the declared queries bench_queries times, in order (bench_extra.py
+# times the same list)
+BENCH_QUERIES = [
+    "scan_filter_project", "parse_grok", "sessionize", "first_event_wins",
+    "lookup_join", "broadcast_enrich", "multi_join_enrich", "rollup_counts",
+    "agg_lineitem", "dedup_exact", "token_stats", "quality", "fingerprint",
+    "token_jaccard_pairs", "ann_topk_dot", "minhash_neardup",
+    "simhash_neardup", "embedding_neardup", "media_metadata",
+    "typed_sink_projection", "url_canonical", "url_dedup", "line_dedup",
+    "vocabulary", "gopher_quality", "repetition_stats", "pii_redact",
+    "sample_split", "decontaminate", "decontaminate_spans",
+    "perplexity_bucket", "pack_sequences_bpe", "weighted_mix",
+    "train_order", "quality_classifier", "domain_cap", "semantic_dedup",
+    "chunk_documents", "cross_source_dups", "incremental_dedup",
+    "corpus_report", "shard_manifest",
+]
+
+
 def build_spark(cpus: int, shuffle_partitions: int | None = None,
                 python_heavy: bool = False):
     """``python_heavy=True`` sizes the JVM task slots at half the core
@@ -64,7 +82,6 @@ def stage_pages(spark, n_urls: int, workdir: str, n_hot: int = 4,
 
 
 def run_pipeline_e2e(spark, pages_path: str, sink_path: str,
-                     salt_hot_keys: bool = False,
                      typed_sink: bool = True) -> tuple[float, int]:
     """Timed: read pages → parse → sessionize → enrich → route → write."""
     from pyspark.sql import functions as F
@@ -74,8 +91,7 @@ def run_pipeline_e2e(spark, pages_path: str, sink_path: str,
         pages_to_lines, with_batch_seq)
 
     shutil.rmtree(sink_path, ignore_errors=True)
-    cfg = PipelineConfig(salt_hot_keys=salt_hot_keys,
-                         typed_sink=typed_sink)
+    cfg = PipelineConfig(typed_sink=typed_sink)
     t0 = time.monotonic()
     pages = spark.read.parquet(pages_path)
     lines = with_batch_seq(pages_to_lines(pages), 1)
@@ -88,24 +104,9 @@ def run_pipeline_e2e(spark, pages_path: str, sink_path: str,
 def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     import __spark_entry__ as entry
 
-    names = ["scan_filter_project", "parse_grok", "sessionize",
-             "first_event_wins", "lookup_join", "broadcast_enrich",
-             "multi_join_enrich", "rollup_counts", "agg_lineitem",
-             "dedup_exact", "token_stats", "quality", "fingerprint",
-             "token_jaccard_pairs", "ann_topk_dot", "minhash_neardup",
-             "simhash_neardup", "embedding_neardup", "media_metadata",
-             "typed_sink_projection", "url_canonical", "url_dedup",
-             "line_dedup", "vocabulary", "gopher_quality",
-             "repetition_stats", "pii_redact", "sample_split",
-             "decontaminate", "decontaminate_spans",
-             "perplexity_bucket", "pack_sequences_bpe",
-             "weighted_mix", "train_order", "quality_classifier",
-             "domain_cap", "semantic_dedup", "chunk_documents",
-             "cross_source_dups", "incremental_dedup", "corpus_report",
-             "shard_manifest"]
     qs = entry.queries()
     out: dict[str, float] = {}
-    for name in names:
+    for name in BENCH_QUERIES:
         t0 = time.monotonic()
         df = qs[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()

@@ -24,22 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import build_spark  # same session config as the frozen bench
-
-BENCH_NAMES = [
-    "scan_filter_project", "parse_grok", "sessionize", "first_event_wins",
-    "lookup_join", "broadcast_enrich", "multi_join_enrich", "rollup_counts",
-    "agg_lineitem", "dedup_exact", "token_stats", "quality", "fingerprint",
-    "token_jaccard_pairs", "ann_topk_dot", "minhash_neardup",
-    "simhash_neardup", "embedding_neardup", "media_metadata",
-    "typed_sink_projection", "url_canonical", "url_dedup", "line_dedup",
-    "vocabulary", "gopher_quality", "repetition_stats", "pii_redact",
-    "sample_split", "decontaminate", "decontaminate_spans",
-    "perplexity_bucket", "pack_sequences_bpe", "weighted_mix",
-    "train_order", "quality_classifier", "domain_cap", "semantic_dedup",
-    "chunk_documents", "cross_source_dups", "incremental_dedup",
-    "corpus_report", "shard_manifest",
-]
+# same session config and query list as the frozen bench
+from bench import BENCH_QUERIES, build_spark
 
 
 def main() -> None:
@@ -58,7 +44,7 @@ def main() -> None:
         elif a == "--tag":
             tag = args[i + 1]; i += 2
         elif a == "--all":
-            names = list(BENCH_NAMES); i += 1
+            names = list(BENCH_QUERIES); i += 1
         else:
             names.append(a); i += 1
 

@@ -43,7 +43,6 @@ def load_config(etc_dir: Optional[str] = None,
       reader.batches   → reader.batchLimit-shaped batch planning (ini:36)
       elastic.index    → orphan sink name (ini:47)
       elastic.parent_index → parent sink name
-      shipper.salt_hot_keys / shipper.n_salts → skew handling
     """
     path = find_config(etc_dir, ini_name)
     cfg = PipelineConfig()
@@ -60,10 +59,7 @@ def load_config(etc_dir: Optional[str] = None,
     n_batches = int(get("reader", "batches", cfg.n_batches))
     orphan = get("elastic", "index", cfg.orphan_sink)
     parent = get("elastic", "parent_index", cfg.parent_sink)
-    salt = str(get("shipper", "salt_hot_keys", "false")).lower() == "true"
-    n_salts = int(get("shipper", "n_salts", cfg.n_salts))
     now_s = get("parser", "now", None)
     now = dt.datetime.fromisoformat(now_s) if now_s else cfg.now
     return PipelineConfig(tz=tz, now=now, n_batches=n_batches,
-                          orphan_sink=orphan, parent_sink=parent,
-                          salt_hot_keys=salt, n_salts=n_salts)
+                          orphan_sink=orphan, parent_sink=parent)

@@ -116,11 +116,13 @@ def bullet_line_ratio(text: Column) -> Column:
     """Fraction of lines starting with a bullet marker (-, *, •)."""
     lines = F.split(text, "\n")
     n = F.size(lines)
-    # one multiline regex pass over the whole document instead of an
-    # interpreted per-line filter lambda (each lambda invocation paid
-    # its own rlike): a line "starts with a bullet after F.trim" iff
-    # (?m)^ *[-*•] matches — F.trim strips exactly the space char
-    bullets = F.regexp_count(text, F.lit(r"(?m)^ *[-*•]"))
+    # one regex pass over the whole document instead of an interpreted
+    # per-line filter lambda (each lambda invocation paid its own
+    # rlike): a line "starts with a bullet after F.trim" iff
+    # (?:^|\n) *[-*•] matches — F.trim strips exactly the space char.
+    # Lines start only after "\n", as in the split above: (?m)^ would
+    # also start one after "\r", U+0085 and U+2028
+    bullets = F.regexp_count(text, F.lit(r"(?:^|\n) *[-*•]"))
     return F.when(n > 0, bullets.cast("double") / n).otherwise(F.lit(0.0))
 
 

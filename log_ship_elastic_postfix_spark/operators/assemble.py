@@ -3,16 +3,13 @@
 The reference folds each batch's parsed lines into one nested document
 per queue id via an in-memory hash map + per-program merge rules
 (/root/reference/lib/logship.js:314-335, lib/postfix-doc.js:147-292).
-Here the same ordered, non-commutative fold runs distributed:
+Here the same ordered, non-commutative fold runs distributed, one
+Python call per shuffle partition:
 
-    parsed.groupBy("qid").applyInPandas(fold, DOC_SCHEMA)
+    parsed.repartition("qid").mapInPandas(fold_partition, DOC_SCHEMA)
 
-plus a **salted two-phase variant** for hot keys (high-volume relay
-hosts / duplicate urls): phase 1 folds each (qid, salt) subgroup into
-partial candidate-event lists tagged with line numbers; phase 2 merges
-partials per qid, re-sorting by line number so ordering-sensitive rules
-(first-`queued`-wins, exact-duplicate suppression, last-hoist-wins)
-apply identically to the unsalted fold. Tests assert salted ≡ unsalted.
+A hot qid is folded by one task: its doc is one ordered pass over all
+of its lines, so splitting the key across tasks cannot divide the work.
 
 Merge-rule semantics (each cites the reference):
 - qmgr `removed` → isFinal + {date, action:'removed'} event
@@ -41,7 +38,6 @@ from typing import Iterable, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, LongType, StringType,
                                StructField, StructType)
 
@@ -77,30 +73,7 @@ DOC_SCHEMA = StructType(DOC_FIELDS)
 _HOIST_SMTP = ("delay", "delays")
 _HOIST_QMGR = ("from", "size", "nrcpt")
 _COPY_CLEANUP = ("message-id", "resent-message-id")
-
-# partial (phase-1) schema for the salted fold: candidate events and
-# root-hoist records carry the FULL composite order key (one _o<i>
-# column per order col — batch_seq AND line_no by default, so
-# multi-batch input merges in the same global order as the unsalted
-# fold; round-1 bug: ordering by line_no alone broke the ≡ contract
-# whenever line_no was not globally ordering-defining)
-def _partial_schema(order_cols: list[str]) -> StructType:
-    okeys = [StructField(f"_o{i}", LongType())
-             for i in range(len(order_cols))]
-    event_type = StructType(
-        okeys + [StructField(f, StringType()) for f in EVENT_FIELDS])
-    root_type = StructType(
-        okeys + [StructField("field", StringType()),
-                 StructField("value", StringType())])
-    return StructType(
-        [StructField("qid", StringType(), False)]
-        + [StructField(f"_min_o{i}", LongType())
-           for i in range(len(order_cols))]
-        + [StructField("host", StringType()),
-           StructField("date", StringType()),
-           StructField("isFinal", BooleanType()),
-           StructField("root_sets", ArrayType(root_type)),
-           StructField("events", ArrayType(event_type))])
+_EVENT_FIELD_SET = frozenset(EVENT_FIELDS)
 
 
 def _event_key(e: dict) -> frozenset:
@@ -160,25 +133,6 @@ class _EventAcc:
         self.events.append(e)
 
 
-def _add_event(events, e: dict, clean: bool = False) -> None:
-    """Reference addEvent: first-queued-wins + exact-dup suppression.
-    Accepts an _EventAcc (fast path) or a plain list (compat)."""
-    if isinstance(events, _EventAcc):
-        events.append(e, clean=clean)
-        return
-    if not clean:
-        e = {k: v for k, v in e.items()
-             if v is not None and k not in ("qid", "host", "prog")}
-    if e.get("action") == "queued":
-        if any(ev.get("action") == "queued" for ev in events):
-            return
-    key = _event_key(e)
-    for ev in events:
-        if _event_key(ev) == key:
-            return
-    events.append(e)
-
-
 def _event_from(lo: dict, action: str | None = None,
                 drop: tuple = (), msg: str | None = None) -> dict:
     """Build a clean event straight from the (sparse) line dict: one
@@ -194,32 +148,32 @@ def _event_from(lo: dict, action: str | None = None,
     return e
 
 
-def _dispatch(doc: dict, lo: dict, events: list[dict]) -> None:
+def _dispatch(doc: dict, lo: dict, events: _EventAcc) -> None:
     """Apply one parsed line to a doc (reference update(),
     lib/postfix-doc.js:147-182)."""
     prog = lo.get("prog") or ""
     if prog == "postfix/qmgr":
         if lo.get("msg") == "removed":
             doc["isFinal"] = True
-            _add_event(events, {"date": lo.get("date"), "action": "removed"})
+            events.append({"date": lo.get("date"), "action": "removed"})
             return
         if lo.get("status"):
             if "expired, returned" in lo["status"]:
-                _add_event(events, _event_from(lo, "expired",
-                                               drop=("status",)), clean=True)
+                events.append(_event_from(lo, "expired", drop=("status",)),
+                              clean=True)
             return  # other statuses: parse-error drop
         for f in _HOIST_QMGR:
             doc[f] = lo.get(f)
         if doc.get("from") is None:
             doc["from"] = ""  # null sender
-        _add_event(events, _event_from(lo, "queued", drop=_HOIST_QMGR),
-                   clean=True)
+        events.append(_event_from(lo, "queued", drop=_HOIST_QMGR),
+                      clean=True)
         return
     if prog == "postfix/smtp":
         for f in _HOIST_SMTP:
             if lo.get(f) is not None:
                 doc[f] = lo[f]
-        _add_event(events, _event_from(lo, drop=_HOIST_SMTP), clean=True)
+        events.append(_event_from(lo, drop=_HOIST_SMTP), clean=True)
         return
     if prog == "postfix/cleanup":
         for f in _COPY_CLEANUP:
@@ -234,16 +188,16 @@ def _dispatch(doc: dict, lo: dict, events: list[dict]) -> None:
     if prog == "postfix/postsuper":
         if lo.get("msg") == "removed":
             doc["isFinal"] = True
-        _add_event(events, {"date": lo.get("date"), "action": lo.get("msg")})
+        events.append({"date": lo.get("date"), "action": lo.get("msg")})
         return
     if prog == "postfix/error":
-        _add_event(events, _event_from(lo, "error"), clean=True)
+        events.append(_event_from(lo, "error"), clean=True)
         return
     if prog == "postfix/bounce":
-        _add_event(events, _event_from(lo, "bounced"), clean=True)
+        events.append(_event_from(lo, "bounced"), clean=True)
         return
     if prog == "postfix/local":
-        _add_event(events, _event_from(lo), clean=True)
+        events.append(_event_from(lo), clean=True)
         return
     if prog.startswith("rmilter"):
         # rmilter-only action synthesis (lib/postfix-doc.js:233-255) —
@@ -255,8 +209,8 @@ def _dispatch(doc: dict, lo: dict, events: list[dict]) -> None:
             action = f"rmilter_virus_{lo['virus_scan']}"
         if lo.get("dkim") is not None:
             action = f"rmilter_dkim_{lo['dkim']}"
-        _add_event(events, _event_from(lo, action, msg=lo.get("raw_msg")),
-                   clean=True)
+        events.append(_event_from(lo, action, msg=lo.get("raw_msg")),
+                      clean=True)
         return
     if prog.startswith("rspamd"):
         # rspamd rule (lib/postfix-doc.js:257-269): default action only
@@ -264,24 +218,12 @@ def _dispatch(doc: dict, lo: dict, events: list[dict]) -> None:
         action = ("rspamd_scan_result"
                   if lo.get("action") is None and lo.get("score") is not None
                   else lo.get("action"))
-        _add_event(events, _event_from(lo, action, msg=lo.get("raw_msg")),
-                   clean=True)
+        events.append(_event_from(lo, action, msg=lo.get("raw_msg")),
+                      clean=True)
         return
     # unknown postfix subprogram: generic event append (reference
     # default switch fall-through, lib/postfix-doc.js:181)
-    _add_event(events, _event_from(lo), clean=True)
-
-
-_EVENT_FIELD_SET = frozenset(EVENT_FIELDS)
-
-
-def _event_fields_only(lo: dict) -> dict:
-    # iterate the (sparse, ~8-key) line dict against a frozenset
-    # instead of probing all EVENT_FIELDS twice — the fold's hottest
-    # call (one per event line); key order is irrelevant (dedup keys
-    # are sorted, Arrow rows are re-projected densely in _doc_to_row)
-    return {k: v for k, v in lo.items()
-            if v is not None and k in _EVENT_FIELD_SET}
+    events.append(_event_from(lo), clean=True)
 
 
 def fold_lines(rows: Iterable[dict], seed: Optional[dict] = None) -> Optional[dict]:
@@ -321,11 +263,6 @@ def _doc_to_row(doc: dict) -> dict:
     # dense (all-field) event dicts for Arrow, via C-speed dict merge
     row["events"] = [_EVENT_TEMPLATE | e for e in doc["events"]]
     return row
-
-
-def _order_columns(pdf: pd.DataFrame, order_cols: list[str]) -> pd.DataFrame:
-    return pdf.sort_values([c for c in order_cols if c in pdf.columns],
-                           kind="mergesort")
 
 
 def _fold_partition_factory(order_cols: list[str], group_cols: list[str],
@@ -393,7 +330,7 @@ def _fold_partition_factory(order_cols: list[str], group_cols: list[str],
 
 
 def assemble(parsed: DataFrame, order_cols: Optional[list[str]] = None) -> DataFrame:
-    """parsed lines → one doc per qid (single-phase fold).
+    """parsed lines → one doc per qid.
 
     The repartition on qid is the pipeline's only wide dependency —
     the same single hash exchange a groupBy would plan; the fold runs
@@ -402,164 +339,3 @@ def assemble(parsed: DataFrame, order_cols: Optional[list[str]] = None) -> DataF
     order_cols = order_cols or ["batch_seq", "line_no"]
     return parsed.repartition("qid").mapInPandas(
         _fold_partition_factory(order_cols, ["qid"]), DOC_SCHEMA)
-
-
-# ------------------------------------------------------------------ salted
-def assemble_salted(
-    parsed: DataFrame,
-    *,
-    n_salts: int = 8,
-    order_cols: Optional[list[str]] = None,
-    line_no_col: str = "line_no",
-) -> DataFrame:
-    """Two-phase skew-resistant fold: (qid, salt) partials → merge.
-
-    Phase 1 runs rule dispatch per salted subgroup, emitting candidate
-    events tagged with line numbers and root-set records tagged with the
-    setting line. Phase 2 merges partials per qid: events re-sorted by
-    line_no then re-passed through addEvent (so first-queued-wins and
-    dedup see the global order), root hoists take the max-line setter,
-    host/date take the min-line partial. Result is bit-identical to
-    :func:`assemble`; the exchange for phase 1 is on (qid, salt), so a
-    hot qid spreads over ``n_salts`` tasks.
-    """
-    from itertools import groupby as igroupby
-
-    order_cols = order_cols or ["batch_seq", line_no_col]
-    n_ord = len(order_cols)
-    okeys = [f"_o{i}" for i in range(n_ord)]
-    mkeys = [f"_min_o{i}" for i in range(n_ord)]
-    salted = parsed.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]),
-                        F.lit(n_salts)).cast("int"))
-
-    def _okey(lo: dict) -> tuple:
-        return tuple(int(lo[c]) for c in order_cols)
-
-    def _partial_group(rows: list[dict]) -> dict:
-        import json as _json
-
-        qid = rows[0]["qid"]
-        min_ord = _okey(rows[0])
-        host, date = rows[0].get("host"), rows[0].get("date")
-        is_final = False
-        root_sets: list[dict] = []
-        events: list[dict] = []
-        # state-continuation seed (same contract as the plain fold,
-        # _fold_partition_factory): the committed doc rides in as a
-        # _seed_json row at order (−1, …), sorting first within its
-        # salt subgroup. Its roots become order-(−1,…) root_sets (so
-        # later setters overwrite, as sequential dispatch would), its
-        # events become candidates at strictly-negative order keys
-        # preserving their stored order (so the merge-phase addEvent
-        # sees them first — committed events win first-queued/dedup
-        # exactly like the plain seeded fold).
-        sj = rows[0].get("_seed_json")
-        if isinstance(sj, str) and sj:  # to_dict("records") keeps NaN
-            seed = _json.loads(sj)
-            rows = rows[1:]
-            host, date = seed.get("host"), seed.get("date")
-            is_final = bool(seed.get("isFinal"))
-            neg = dict(zip(okeys, min_ord))
-            for k in ("from", "size", "nrcpt", "uid", "delay", "delays",
-                      "message-id", "resent-message-id"):
-                if seed.get(k) is not None:
-                    root_sets.append({**neg, "field": k,
-                                      "value": str(seed[k])})
-            sevents = seed.get("events") or []
-            for j, e in enumerate(sevents):
-                rec = {f: e.get(f) for f in EVENT_FIELDS}
-                rec.update(dict(zip(
-                    okeys, (-1,) * (n_ord - 1) + (j - len(sevents),))))
-                events.append(rec)
-        for lo in rows:
-            doc: dict = {}
-            evs: list[dict] = []
-            _dispatch(doc, lo, evs)
-            ok = _okey(lo)
-            oitems = dict(zip(okeys, ok))
-            if doc.pop("isFinal", False):
-                is_final = True
-            for k, v in doc.items():
-                if k == "qid":
-                    continue
-                root_sets.append({**oitems, "field": k,
-                                  "value": None if v is None else str(v)})
-            for e in evs:
-                rec = {f: e.get(f) for f in EVENT_FIELDS}
-                rec.update(oitems)
-                events.append(rec)
-        out = {"qid": qid, "host": host, "date": date, "isFinal": is_final,
-               "root_sets": root_sets, "events": events}
-        out.update(dict(zip(mkeys, min_ord)))
-        return out
-
-    def partial_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        cols = [c for c in ["qid", "_salt"] + order_cols if c in pdf.columns]
-        pdf = pdf.sort_values(cols, kind="mergesort")
-        records = pdf.to_dict("records")
-        out = []
-        for _, grp in igroupby(records, key=lambda r: (r["qid"], r["_salt"])):
-            out.append(_partial_group(list(grp)))
-            if len(out) >= 2048:
-                yield pd.DataFrame(out)
-                out = []
-        if out:
-            yield pd.DataFrame(out)
-
-    partials = salted.repartition("qid", "_salt").mapInPandas(
-        partial_partition, _partial_schema(order_cols))
-
-    def _ord_of(rec: dict) -> tuple:
-        return tuple(rec[k] for k in okeys)
-
-    def _merge_group(rows: list[dict]) -> dict:
-        rows.sort(key=lambda r: tuple(r[k] for k in mkeys))
-        first = rows[0]
-        doc = {"qid": first["qid"], "host": first["host"],
-               "date": first["date"],
-               "isFinal": any(r["isFinal"] for r in rows)}
-        # root hoists: last (max order-key) setter wins, as sequential
-        # dispatch overwrites on every occurrence
-        sets: list[dict] = []
-        for r in rows:
-            if r["root_sets"] is not None:
-                sets.extend(list(r["root_sets"]))  # numpy array from Arrow
-        sets.sort(key=_ord_of)
-        for s in sets:
-            doc[s["field"]] = s["value"]
-        # events: global (batch_seq, line_no) order, then the ordered
-        # addEvent pass
-        cand: list[dict] = []
-        for r in rows:
-            if r["events"] is not None:
-                cand.extend(list(r["events"]))
-        cand.sort(key=_ord_of)
-        acc = _EventAcc()
-        for e in cand:
-            acc.append({f: e.get(f) for f in EVENT_FIELDS})
-        doc["events"] = acc.events
-        doc["n_events"] = len(acc.events)
-        return _doc_to_row(doc)
-
-    def merge_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        pdf = pdf.sort_values(["qid"], kind="mergesort")
-        records = pdf.to_dict("records")
-        out = []
-        for _, grp in igroupby(records, key=lambda r: r["qid"]):
-            out.append(_merge_group(list(grp)))
-            if len(out) >= 2048:
-                yield pd.DataFrame(out)
-                out = []
-        if out:
-            yield pd.DataFrame(out)
-
-    return partials.repartition("qid").mapInPandas(merge_partition, DOC_SCHEMA)

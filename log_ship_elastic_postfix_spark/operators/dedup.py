@@ -184,39 +184,6 @@ def _coef(n: int) -> np.ndarray:
     return np.array(base[:n], dtype=np.int64)
 
 
-def minhash_signature(text_col: Column, k: int = 32,
-                      n_shingle: int = 3) -> Column:
-    """k minhash values over word n-gram shingles (one Arrow batch
-    pass; numpy (a_i·h + b_i) mod 2³¹−1 over window-mixed token
-    hashes). Documents with fewer than ``n_shingle`` tokens return
-    NULL — callers must exclude them from banding (degenerate-bucket
-    rule in the module docstring)."""
-    a = np.array([((2 * i + 1) * 2654435761) % _MERSENNE31 or 1
-                  for i in range(k)], dtype=np.int64)
-    b = np.array([(i * 0x9E3779B1 + 0x5BD1E995) % _MERSENNE31
-                  for i in range(k)], dtype=np.int64)
-    coef = _coef(n_shingle)
-
-    @pandas_udf("array<long>")
-    def sig(texts: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for t in texts:
-            toks = (t or "").lower().split()
-            if len(toks) < n_shingle:
-                out.append(None)
-                continue
-            sh = _shingle_hashes(_token_hashes(toks, cache), n_shingle, coef)
-            vals = (a[:, None] * sh[None, :] + b[:, None]) % _MERSENNE31
-            out.append(vals.min(axis=1).tolist())
-        return pd.Series(out, dtype=object)
-
-    # non-deterministic marking stops the optimizer duplicating the
-    # kernel below pushed filters/generators (guide §4.4 — measured
-    # 4 ArrowEvalPython nodes for one call)
-    return sig.asNondeterministic()(text_col)
-
-
 def minhash_band_buckets(text_col: Column, k: int = 32,
                          n_shingle: int = 3, bands: int = 8) -> Column:
     """Per-document LSH band-bucket keys (``array<long>``, one 64-bit
@@ -232,10 +199,11 @@ def minhash_band_buckets(text_col: Column, k: int = 32,
     identical candidate semantics (equal tuples always collide; a
     64-bit accidental collision merges two buckets and can only ADD
     candidates, which exact verification then scores — the oracle's
-    recall-1.0 gate is unaffected). NULL for un-shingle-able docs,
-    like :func:`minhash_signature`. Raises ``ValueError`` at call
-    time unless ``bands`` divides ``k`` — the kernel reshapes the k
-    minhash values into ``(bands, k // bands)``."""
+    recall-1.0 gate is unaffected). NULL for documents with fewer
+    than ``n_shingle`` tokens (degenerate-bucket rule in the module
+    docstring). Raises ``ValueError`` at call time unless ``bands``
+    divides ``k`` — the kernel reshapes the k minhash values into
+    ``(bands, k // bands)``."""
     if k <= 0 or bands <= 0 or k % bands:
         raise ValueError(
             f"minhash banding needs positive k and bands, with bands "
@@ -398,7 +366,7 @@ def _shingle_strings(text_col: Column, n: int) -> Column:
     produces, built in one Arrow batch pass instead of the interpreted
     arrays_zip/transform expression tree (measured ~2.7 core-ms per
     doc interpreted vs ~0.05 here). Same tokenization as
-    :func:`minhash_signature`; first-occurrence order like
+    :func:`minhash_band_buckets`; first-occurrence order like
     array_distinct (order never reaches results — only intersection /
     union SIZES do)."""
 
@@ -782,7 +750,7 @@ def _gram_hashes64(text_col: Column, n: int) -> Column:
     bottleneck (~8.5 s of a 12.9 s query at 50k docs), and per-doc
     uniqueness here makes the downstream ``(id, hash) DISTINCT``
     exchange unnecessary. Same tokenization rule as
-    :func:`minhash_signature` (lowercase whitespace split); the
+    :func:`minhash_band_buckets` (lowercase whitespace split); the
     64-bit space keeps corpus-scale collision odds negligible, the
     same contract the xxhash64 form relied on."""
     coef_lo = _coef(n)

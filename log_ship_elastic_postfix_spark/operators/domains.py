@@ -22,8 +22,9 @@ Scale design for the cap (the part a naive window gets wrong):
 * Over-cap rows rank in TWO phases: a salted local top-cap
   (window over (domain, salt) keeps ≤ cap rows per salt, bounding
   every sort task) then the global top-cap over the ≤ cap·n_salts
-  survivors per domain. Salted ≡ unsalted is pinned by test, the same
-  contract as :func:`.assemble.assemble_salted`.
+  survivors per domain. Salting pays here because a top-cap divides:
+  each salt's local top-cap bounds its sort task, and the merge sees
+  at most cap·n_salts rows. Salted ≡ unsalted is pinned by test.
 
 Ordering is total — (order column, id) — so the kept set is
 deterministic and an external SQL engine restates it verbatim.

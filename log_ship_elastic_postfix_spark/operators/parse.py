@@ -11,23 +11,24 @@ Mirrors the reference's read→parse path
    qid-less lines, lib/logship.js:107-111)
 5. date normalization → ISO string with tz offset      [P5]
 
-Physical design: **one Arrow-vectorized mapInPandas pass** (pandas
-``str.extract``, C-regex, each pattern applied once per batch).
-The earlier pure-Catalyst formulation (functions/grammar.py) was
-measured ~20× slower because CollapseProject inlines the envelope
+Physical design: **one Arrow-vectorized mapInArrow pass** (RE2
+kernels from ``pyarrow.compute``, each pattern applied once per
+batch). The earlier pure-Catalyst formulation (functions/grammar.py)
+was measured ~20× slower because CollapseProject inlines the envelope
 regex into every downstream field expression — ~30 executions of the
 same pattern per line; Catalyst has no common-subexpression reuse
 across projection fields. The stage stays narrow (no shuffle), and
 column pruning still reaches the scan (only the line column and
-passengers are read).
+passengers are read). The pandas ``str.extract`` form of the same
+grammar lives in ``tests/grok_reference.py`` as the differential
+oracle.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import re
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -35,8 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions.grammar import (ENVELOPE_RE, MSG_REST_RE, PROG_FILTER_RE,
-                                 QID_RE)
+from ..functions.grammar import PROG_FILTER_RE
 
 # flat parsed-line columns, FIXTURES.md §2 (all strings in flight —
 # the reference keeps size/nrcpt as strings, test/logship.js:26-27;
@@ -53,31 +53,6 @@ _PLAIN_KEYS = ["size", "nrcpt", "relay", "delay", "delays", "dsn", "uid",
                "spam_scan", "virus_scan", "dkim", "score"]
 _RMILTER_KEYS = ("spam_scan", "virus_scan", "dkim", "score")
 
-# one combined key=value grammar: a single C-regex extractall pass
-# replaces the 15 per-key full-line scans of round 1 (measured ~2.7×
-# on the kv section; parse is 94% of pipeline wall time). Angle
-# values keep their <> here and are unwrapped per-key afterwards so
-# angle keys still REQUIRE the <> form (reference grammar contract).
-_KV_RE = re.compile(r"(?:^|[,\s])([A-Za-z-]+)=(<[^>]*>|[^,\s]+)")
-
-
-def _kv_wide(series: pd.Series, keys: list[str]) -> pd.DataFrame:
-    """Vectorized key=value table: extractall → first-per-(row,key) →
-    pivot to one column per wanted key (NaN where absent)."""
-    m = series.str.extractall(_KV_RE)
-    m.columns = ["k", "v"]
-    m = m[m["k"].isin(keys)]
-    if m.empty:
-        return pd.DataFrame(None, index=series.index, columns=keys,
-                            dtype=object)
-    mm = m.reset_index()
-    row_col = mm.columns[0]  # original row index
-    mm = mm.drop_duplicates(subset=[row_col, "k"], keep="first")
-    wide = mm.pivot(index=row_col, columns="k", values="v")
-    wide = wide.reindex(index=series.index, columns=keys)
-    # object dtype + None fill: an absent key otherwise reindexes to an
-    # all-NaN float64 column and pandas .str refuses non-string dtypes
-    return wide.astype(object).where(wide.notna(), None)
 
 _FUTURE_SLACK = pd.Timedelta(seconds=6 * 30 * 24 * 60 * 60)  # ref: 6×30 d
 
@@ -180,90 +155,6 @@ def _normalize_dates_impl(mon: pd.Series, day: pd.Series, hh: pd.Series,
     return out
 
 
-def _grok_batch(pdf: pd.DataFrame, line_col: str, tz: str,
-                now: dt.datetime,
-                fields: Optional[list[str]] = None) -> pd.DataFrame:
-    """One vectorized pass: envelope → pre-filter → grammar → dates.
-    Adds host/prog/date, the requested PARSED_FIELDS columns
-    (``fields=None`` = all of them), and ``reject_reason`` (null for
-    kept rows). ``qid``/``queue_id`` are always derived internally —
-    the qid-presence rule depends on them — but only requested fields
-    appear in the output."""
-    want = set(PARSED_FIELDS if fields is None else fields) | {"qid"}
-    line = pdf[line_col].fillna("")
-    env = line.str.extract(ENVELOPE_RE)
-    mon, day, hh, mi, ss = (env[i] for i in range(5))
-    host, prog, msg = env[5], env[6], env[8]
-
-    envelope_ok = prog.notna()
-    prog_ok = envelope_ok & prog.str.match(PROG_FILTER_RE, na=False)
-    is_postfix = prog.str.startswith("postfix/").fillna(False)
-
-    qid = msg.str.extract(QID_RE)[0].where(is_postfix)
-    rest = msg.str.extract(MSG_REST_RE)[0].where(is_postfix)
-
-    out = pdf.copy()
-    out["host"] = host
-    out["prog"] = prog
-    out["date"] = _normalize_dates(mon, day, hh, mi, ss, tz, now) \
-        .where(envelope_ok)
-
-    angle_keys = [k for k in _ANGLE_KEYS if k in want]
-    plain_keys = [k for k in _PLAIN_KEYS if k in want]
-    wide = _kv_wide(rest, angle_keys + plain_keys)
-    for k in angle_keys:
-        v = wide[k]
-        angled = v.str.startswith("<", na=False) & v.str.endswith(">", na=False)
-        out[k] = v.str[1:-1].where(angled)
-    non_pf_msg = msg.where(~is_postfix)
-    rmilter_keys = [k for k in _RMILTER_KEYS if k in want]
-    if rmilter_keys and non_pf_msg.notna().any():
-        # rmilter/rspamd keys live in the free-form msg (small subset)
-        rwide = _kv_wide(non_pf_msg, rmilter_keys)
-    else:
-        rwide = None
-    for k in plain_keys:
-        ser = wide[k]
-        # a plain key never takes the angle form; drop accidental <..>
-        ser = ser.where(~ser.str.startswith("<", na=False))
-        if rwide is not None and k in _RMILTER_KEYS:
-            ser = ser.fillna(rwide[k])
-        out[k] = ser
-    if "status" in want:
-        out["status"] = rest.str.extract(r"(?:^|[,\s])status=(.*)$",
-                                         expand=True)[0]
-
-    if "message" in want:
-        is_bounce = (prog == "postfix/bounce").fillna(False)
-        out["message"] = rest.where(is_bounce)
-    if "msg" in want:
-        is_bounce = (prog == "postfix/bounce").fillna(False)
-        has_kv = rest.str.contains(r"(?:^|[,\s])[A-Za-z-]+=", na=False)
-        out["msg"] = rest.where(is_postfix & ~is_bounce & ~has_kv
-                                & rest.notna() & (rest != ""))
-
-    queue_id = msg.str.extract(r"queue.?id:\s*<([^>]+)>",
-                               expand=True)[0].where(~is_postfix)
-    if "queue_id" in want:
-        out["queue_id"] = queue_id
-    if "raw_msg" in want:
-        out["raw_msg"] = msg.where(~is_postfix & prog_ok)
-
-    out["qid"] = qid.fillna(queue_id)
-
-    reason = pd.Series(pd.NA, index=pdf.index, dtype="object")
-    reason = reason.mask(~envelope_ok, "envelope_miss")
-    reason = reason.mask(envelope_ok & ~prog_ok, "prog_filtered")
-    out["reject_reason"] = reason
-    # NaN → None on the generated string columns so Arrow emits proper
-    # nulls (passenger columns keep their native dtypes untouched)
-    emitted = [f for f in PARSED_FIELDS if f in want]
-    for c in ["host", "prog", "date", *emitted, "reject_reason"]:
-        col = out[c]
-        out[c] = col.astype(object).where(col.notna(), None)
-    return out
-
-
 # ------------------------------------------------------- arrow grok
 # RE2 (pyarrow.compute) implementation of the identical grammar —
 # measured 2-4.5× the pandas object-loop regex machinery; RE2 has no
@@ -285,8 +176,8 @@ def _grok_arrow(batch, line_col: str, tz: str, now: dt.datetime,
                 fields: Optional[list[str]] = None):
     """One RecordBatch through the grok grammar, all-Arrow kernels
     (plus the pandas date normalizer over the five tiny component
-    columns). Semantically identical to :func:`_grok_batch` — pinned
-    by tests/test_grammar_differential.py. ``fields`` limits which
+    columns). Semantically identical to the pandas reference grok in
+    tests/grok_reference.py — pinned by the differential tests. ``fields`` limits which
     PARSED_FIELDS are extracted (each key is its own RE2 pass over
     ``rest``, so pruning is a direct per-key saving — guide §4.1)."""
     import pyarrow as pa
@@ -387,14 +278,11 @@ def parse_all(
     tz: str = "America/Phoenix",
     now: Optional[dt.datetime] = None,
     passengers: Optional[list[str]] = None,
-    engine: str = "arrow",
     fields: Optional[list[str]] = None,
 ) -> DataFrame:
     """Full grok over a raw-line DataFrame: selected passengers
     preserved, parsed columns + ``reject_reason`` added. Narrow; one
-    Arrow pass (``engine="arrow"``: RE2 kernels via mapInArrow, the
-    production path; ``engine="pandas"``: the reference implementation
-    the differential test pins it against).
+    Arrow pass (RE2 kernels via mapInArrow).
 
     ``passengers`` limits which input columns cross the Python
     boundary and return — every byte of an unused passenger column is
@@ -428,20 +316,11 @@ def parse_all(
     )
     out_names = [f.name for f in schema.fields]
 
-    if engine == "arrow":
-        def grok_arrow(batches):
-            for b in batches:
-                yield _grok_arrow(b, line_col, tz, now, out_names,
-                                  fields=emit)
+    def grok_arrow(batches):
+        for b in batches:
+            yield _grok_arrow(b, line_col, tz, now, out_names, fields=emit)
 
-        return lines.mapInArrow(grok_arrow, schema)
-
-    def grok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _grok_batch(pdf, line_col, tz, now, fields=emit)
-            yield out[out_names]
-
-    return lines.mapInPandas(grok, schema)
+    return lines.mapInArrow(grok_arrow, schema)
 
 
 def parse_lines(

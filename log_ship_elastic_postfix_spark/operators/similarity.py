@@ -38,11 +38,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    denom = _norm(a) * _norm(b)
-    return F.when(denom > 0, _dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
 def _null_safe(vecs: list, dim: int | None = None) -> list:
     """Replace NULL vectors with zero vectors of the batch's dim —
     reproducing the JVM expression's null semantics exactly: a null

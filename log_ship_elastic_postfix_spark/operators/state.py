@@ -393,9 +393,6 @@ def merge_with_state(
     parsed: DataFrame,
     state_docs: Optional[DataFrame],
     order_cols: Optional[list[str]] = None,
-    *,
-    salt_hot_keys: bool = False,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Continuation fold: committed docs ⊔ new lines by qid.
 
@@ -405,25 +402,12 @@ def merge_with_state(
     committed doc becomes one row carrying its JSON form with
     batch_seq/line_no = −1, unioned into the parsed-line stream, so the
     continuation costs exactly the same single exchange as the plain
-    fold (no per-key cogroup round-trips).
-
-    ``salt_hot_keys=True`` runs the skew-resistant two-phase fold
-    instead — the seed row rides the same union and is restored inside
-    the salted partial phase (bit-identical result; pinned by
-    tests/test_round3.py::test_salted_state_continuation_equals_plain),
-    so streaming/state batches keep hot-key protection too."""
-    from .assemble import assemble, assemble_salted
+    fold (no per-key cogroup round-trips)."""
+    from .assemble import assemble
 
     order_cols = order_cols or ["batch_seq", "line_no"]
-
-    def _fold(df: DataFrame) -> DataFrame:
-        if salt_hot_keys:
-            return assemble_salted(df, n_salts=n_salts,
-                                   order_cols=order_cols)
-        return assemble(df, order_cols=order_cols)
-
     if state_docs is None:
-        return _fold(parsed)
+        return assemble(parsed, order_cols=order_cols)
 
     ptypes = dict(parsed.dtypes)
     doc_cols = [F.col(f"`{f.name}`") for f in DOC_FIELDS]
@@ -434,4 +418,4 @@ def merge_with_state(
         F.lit(-1).cast(ptypes.get("line_no", "bigint")).alias("line_no"),
     )
     unioned = parsed.unionByName(seeds, allowMissingColumns=True)
-    return _fold(unioned)
+    return assemble(unioned, order_cols=order_cols)

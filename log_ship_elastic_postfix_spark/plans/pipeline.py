@@ -25,7 +25,6 @@ _log = logging.getLogger(__name__)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import assemble as assemble_mod
 from ..operators import enrich, route
 from ..operators.parse import ParseResult, is_reject, parse_lines
 from ..operators.state import StateStore, merge_with_state
@@ -46,8 +45,6 @@ class PipelineConfig:
     n_batches: int = 1
     orphan_sink: str = route.ORPHAN_SINK
     parent_sink: str = route.PARENT_SINK
-    salt_hot_keys: bool = False
-    n_salts: int = 8
     order_cols: tuple[str, ...] = ("batch_seq", "line_no")
     # S7 typed sink (index-map-template projection) on the terminal
     # write; False writes the all-string in-flight shape (the r1
@@ -91,15 +88,8 @@ def assemble_stage(parsed: DataFrame, cfg: PipelineConfig,
             if c in parsed.columns]
     keep += [f for f in PARSED_FIELDS if f in parsed.columns and f != "qid"]
     parsed = parsed.select(*[F.col(f"`{c}`") for c in keep])
-    order_cols = list(cfg.order_cols)
-    if state_docs is not None:
-        return merge_with_state(parsed, state_docs, order_cols=order_cols,
-                                salt_hot_keys=cfg.salt_hot_keys,
-                                n_salts=cfg.n_salts)
-    if cfg.salt_hot_keys:
-        return assemble_mod.assemble_salted(
-            parsed, n_salts=cfg.n_salts, order_cols=order_cols)
-    return assemble_mod.assemble(parsed, order_cols=order_cols)
+    return merge_with_state(parsed, state_docs,
+                            order_cols=list(cfg.order_cols))
 
 
 def run_batch(

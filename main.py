@@ -6,7 +6,7 @@ Usage (cluster):
     spark-submit --py-files job.zip main.py \
         --pages s3://bucket/pages/ --state s3://bucket/state/ \
         --bookmark /var/lib/logship/bookmark --batches 64 \
-        --tz America/Phoenix --salt-hot-keys
+        --tz America/Phoenix
 
 Local smoke:
     python main.py --generate 10000 --workdir /tmp/logship-demo
@@ -40,8 +40,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--batches", type=int, default=8)
     p.add_argument("--tz", default="America/Phoenix")
     p.add_argument("--now", help="deterministic clock (ISO); default: wall")
-    p.add_argument("--salt-hot-keys", action="store_true")
-    p.add_argument("--n-salts", type=int, default=8)
     p.add_argument("--master", default=None,
                    help="override master (default: from spark-submit)")
     p.add_argument("--streaming", action="store_true",
@@ -90,9 +88,7 @@ def main(argv: list[str] | None = None) -> None:
 
     now = (dt.datetime.fromisoformat(args.now) if args.now
            else dt.datetime.now())
-    cfg = PipelineConfig(tz=args.tz, now=now, n_batches=args.batches,
-                         salt_hot_keys=args.salt_hot_keys,
-                         n_salts=args.n_salts)
+    cfg = PipelineConfig(tz=args.tz, now=now, n_batches=args.batches)
 
     bookmark = BookmarkStore(args.bookmark
                              or os.path.join(args.workdir, "bookmark"))

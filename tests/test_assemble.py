@@ -1,7 +1,7 @@
 """Golden-doc sessionizer tests — 1:1 mirrors of the reference's
 merge-rule assertions (/root/reference/test/postfix-doc.js:50-261 and
 test/logship.js:44-68), run both through the pure-Python fold oracle
-and the distributed applyInPandas plan, plus salted ≡ unsalted."""
+and the distributed mapInPandas plan, plus a hot-key golden doc."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from log_ship_elastic_postfix_spark.operators.assemble import (
-    assemble, assemble_salted, fold_lines)
+    assemble, fold_lines)
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 
 NOW = dt.datetime(2015, 8, 1)
@@ -21,11 +21,11 @@ def _lines_df(spark, lines):
         [(i + 1, l) for i, l in enumerate(lines)], "line_no long, line string")
 
 
-def _docs(spark, lines, salted=False):
+def _docs(spark, lines):
     parsed = parse_lines(_lines_df(spark, lines), now=NOW).parsed
     parsed = parsed.withColumn("batch_seq", F.lit(0))
-    df = assemble_salted(parsed) if salted else assemble(parsed)
-    return {r["qid"]: r.asDict(recursive=True) for r in df.collect()}
+    return {r["qid"]: r.asDict(recursive=True)
+            for r in assemble(parsed).collect()}
 
 
 THREE_LINES = [
@@ -173,27 +173,41 @@ def test_scache_and_cleanup_no_events():
     assert doc["n_events"] == 0
 
 
-def test_salted_equals_unsalted(spark):
-    """The two-phase skew fold must be bit-identical to the plain fold,
-    including ordering-sensitive rules, on a hot key with duplicates."""
+def test_hot_key_golden_doc(spark):
+    """A hot key folds in one ordered pass: first-queued-wins, the
+    exact-duplicate line suppressed, the last smtp hoist kept, and a
+    neighbouring ordinary qid untouched."""
     lines = list(THREE_LINES)
-    # plant a hot key: many smtp deliveries + an exact duplicate
+    # plant a hot key: many smtp deliveries + an exact duplicate; the
+    # last delivery carries its own delay/delays, so the hoisted pair
+    # tells last-wins from first-wins
     hot = [
         f"Jul 26 04:19:{s:02d} mx1 postfix/smtp[99]: 3hotKEYzzz: "
-        f"to=<u{s}@x.net>, relay=r[1]:25, delay=0.9, delays=0.4/0.1/0.2/0.2, "
-        f"dsn=2.0.0, status=sent (250 ok {s})"
+        f"to=<u{s}@x.net>, relay=r[1]:25, "
+        + ("delay=1.7, delays=0.8/0.3/0.3/0.3, " if s == 29
+           else "delay=0.9, delays=0.4/0.1/0.2/0.2, ")
+        + f"dsn=2.0.0, status=sent (250 ok {s})"
         for s in range(30)
     ]
     hot.insert(0, "Jul 26 04:18:00 mx1 postfix/qmgr[99]: 3hotKEYzzz: from=<h@x>, size=5, nrcpt=30 (queue active)")
-    hot.append(hot[5])  # exact duplicate line
+    # exact duplicate of an early line, placed before the last delivery
+    # (a duplicate still hoists, so it must not be the last smtp line)
+    hot.insert(30, hot[5])
     hot.append("Jul 26 04:20:00 mx1 postfix/qmgr[99]: 3hotKEYzzz: removed")
     all_lines = lines + hot
 
-    plain = _docs(spark, all_lines, salted=False)
-    salted = _docs(spark, all_lines, salted=True)
-    assert set(plain) == set(salted)
-    for qid in plain:
-        assert plain[qid] == salted[qid], qid
-    assert plain["3hotKEYzzz"]["n_events"] == 32  # 1 queued + 30 smtp (dup
-    # suppressed; dup's seconds repeat s=5 but line differs only none) ...
-    assert plain["3hotKEYzzz"]["isFinal"] is True
+    docs = _docs(spark, all_lines)
+    assert set(docs) == {"3mfHGL1r9gzyQP", "3hotKEYzzz"}
+    assert docs["3mfHGL1r9gzyQP"] == _docs(spark, THREE_LINES)["3mfHGL1r9gzyQP"]
+    doc = docs["3hotKEYzzz"]
+    # 1 queued + 30 smtp (the duplicate suppressed) + removed
+    assert doc["n_events"] == 32
+    assert doc["isFinal"] is True
+    assert (doc["host"], doc["date"]) == ("mx1", "2015-07-26T04:18:00-07:00")
+    assert (doc["from"], doc["size"], doc["nrcpt"]) == ("h@x", "5", "30")
+    assert (doc["delay"], doc["delays"]) == ("1.7", "0.8/0.3/0.3/0.3")
+    evs = [_ev(e) for e in doc["events"]]
+    assert evs[0]["action"] == "queued"
+    assert [e["to"] for e in evs[1:31]] == [f"u{s}@x.net" for s in range(30)]
+    assert evs[31] == {"date": "2015-07-26T04:20:00-07:00",
+                       "action": "removed"}

@@ -24,15 +24,17 @@ def test_arrow_and_pandas_grok_agree(spark):
     reference implementation row-for-row, including rejects."""
     from log_ship_elastic_postfix_spark.operators.parse import parse_all
 
+    from grok_reference import parse_all_reference
+
     lines = pages_to_lines(
         datagen.generate_pages(spark, 80, n_hot=1, hot_lines=5,
                                n_partitions=2))
     cols = ["line_no", "host", "prog", "date", "reject_reason"] \
         + PARSED_FIELDS
     a = {r["line_no"]: r.asDict() for r in
-         parse_all(lines, now=NOW, engine="arrow").select(*cols).collect()}
+         parse_all(lines, now=NOW).select(*cols).collect()}
     b = {r["line_no"]: r.asDict() for r in
-         parse_all(lines, now=NOW, engine="pandas").select(*cols).collect()}
+         parse_all_reference(lines, now=NOW).select(*cols).collect()}
     assert set(a) == set(b)
     for ln in a:
         assert a[ln] == b[ln], (ln, a[ln], b[ln])

@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the fold's algebraic
-invariants — the guarantees the distributed/salted/replayed variants
-rely on."""
+invariants — the guarantees the distributed and replayed folds rely
+on."""
 
 from __future__ import annotations
 
@@ -170,7 +170,9 @@ def test_arrow_and_pandas_grok_differential_fuzz(lines):
     import pyarrow as pa
 
     from log_ship_elastic_postfix_spark.operators.parse import (
-        PARSED_FIELDS, _grok_arrow, _grok_batch)
+        PARSED_FIELDS, _grok_arrow)
+
+    from grok_reference import _grok_batch
 
     now = dt.datetime(2024, 8, 1)
     out_names = (["line_no", "host", "prog", "date"] + PARSED_FIELDS

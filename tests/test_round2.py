@@ -1,6 +1,6 @@
 """Round-2 behaviors: no-op write suppression, job-level batch retry,
 typed sink schema, bookmark validation, LSH degenerate-input bounds,
-multi-batch salted ordering, and rspamd/rmilter event parity."""
+multi-batch fold ordering, and rspamd/rmilter event parity."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from log_ship_elastic_postfix_spark import datagen
 from log_ship_elastic_postfix_spark.operators import dedup
 from log_ship_elastic_postfix_spark.operators.assemble import (
-    assemble, assemble_salted, fold_lines)
+    assemble, fold_lines)
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 from log_ship_elastic_postfix_spark.operators.state import StateStore
 from log_ship_elastic_postfix_spark.plans.pipeline import (
@@ -224,10 +224,28 @@ def test_lsh_bucket_cap_drops_and_logs(spark, caplog):
     assert any("over-cap" in r.message for r in caplog.records)
 
 
-# --------------------------------------------- multi-batch salted order
-def test_salted_equals_unsalted_across_batches(spark):
+# ---------------------------------------------- multi-batch fold order
+def _sparse_doc(doc: dict) -> dict:
+    """A doc with null event fields dropped (the fold's own event form)."""
+    return {**doc, "events": [{k: v for k, v in e.items() if v is not None}
+                              for e in doc["events"]]}
+
+
+def _oracle_docs(parsed) -> dict:
+    """Per-qid fold_lines over the parsed rows in (batch_seq, line_no)
+    order: the sequential fold the distributed one must reproduce."""
+    rows = sorted((r.asDict() for r in parsed.collect()),
+                  key=lambda r: (r["batch_seq"], r["line_no"]))
+    by_qid: dict[str, list[dict]] = {}
+    for r in rows:
+        by_qid.setdefault(r["qid"], []).append(
+            {k: v for k, v in r.items() if v is not None})
+    return {q: fold_lines(rs) for q, rs in by_qid.items()}
+
+
+def test_fold_orders_by_batch_then_line(spark):
     """line_no restarts per batch, so ordering is only defined by
-    (batch_seq, line_no); the salted fold must honor the composite key
+    (batch_seq, line_no); the fold must honor the composite key
     (round-1 bug: line_no-only ordering picked the wrong hoist)."""
     qid = "3mXbatchQQ"
     b0 = [
@@ -246,19 +264,18 @@ def test_salted_equals_unsalted_across_batches(spark):
 
     plain = {r["qid"]: r.asDict(recursive=True)
              for r in assemble(parsed).collect()}
-    salted = {r["qid"]: r.asDict(recursive=True)
-              for r in assemble_salted(parsed, n_salts=4).collect()}
-    assert plain == salted
+    assert {q: _sparse_doc(d) for q, d in plain.items()} \
+        == _oracle_docs(parsed)
     # last hoist in GLOBAL order is batch 1's delay
     assert plain[qid]["delay"] == "0.999"
     assert plain[qid]["n_events"] == 4
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_salted_equals_unsalted_randomized(spark, seed):
-    """Randomized multi-batch, multi-qid equivalence sweep: interleaved
-    lifecycles, duplicate lines, expired/removed orders — salted must
-    stay bit-identical to the plain fold."""
+def test_fold_matches_oracle_randomized(spark, seed):
+    """Randomized multi-batch, multi-qid sweep: interleaved lifecycles,
+    duplicate lines, expired/removed orders — the distributed fold must
+    equal the sequential per-qid fold_lines oracle."""
     import random
 
     rng = random.Random(seed)
@@ -288,11 +305,9 @@ def test_salted_equals_unsalted_randomized(spark, seed):
     df = spark.createDataFrame(
         lines, "batch_seq long, line_no long, line string")
     parsed = parse_lines(df, now=CFG.now).parsed
-    plain = {r["qid"]: r.asDict(recursive=True)
-             for r in assemble(parsed).collect()}
-    salted = {r["qid"]: r.asDict(recursive=True)
-              for r in assemble_salted(parsed, n_salts=5).collect()}
-    assert plain == salted
+    docs = {r["qid"]: _sparse_doc(r.asDict(recursive=True))
+            for r in assemble(parsed).collect()}
+    assert docs == _oracle_docs(parsed)
 
 
 # ------------------------------------------------ rspamd/rmilter parity

@@ -1,7 +1,7 @@
 """Round-3 behaviors: ADVICE fixes (qid hex rule, arrow rest masking,
 IVF sparse-id centroids, scale-safe verify default, tz-independent
 typed-sink query) and judge items (per-partition noop, sink gate,
-star CC, streaming salt parity)."""
+star CC, multi-batch and streaming state parity on hot keys)."""
 
 from __future__ import annotations
 
@@ -14,11 +14,12 @@ from pyspark.sql import functions as F
 from log_ship_elastic_postfix_spark.operators import dedup, similarity
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 
+from grok_reference import GROK_ENGINES
+
 
 def _parse_qids(spark, lines, engine):
     df = spark.createDataFrame(list(enumerate(lines)), ["line_no", "line"])
-    from log_ship_elastic_postfix_spark.operators.parse import parse_all
-    out = parse_all(df, engine=engine)
+    out = GROK_ENGINES[engine](df)
     return {r["line_no"]: r["qid"] for r in out.collect()}
 
 
@@ -66,8 +67,7 @@ def test_arrow_masks_rest_for_non_postfix(spark):
     for engine in ("pandas", "arrow"):
         df = spark.createDataFrame(
             list(enumerate(NON_PF_KV_LINES)), ["line_no", "line"])
-        from log_ship_elastic_postfix_spark.operators.parse import parse_all
-        rows = {r["line_no"]: r for r in parse_all(df, engine=engine).collect()}
+        rows = {r["line_no"]: r for r in GROK_ENGINES[engine](df).collect()}
         for i in rows:
             assert rows[i]["relay"] is None, (engine, i)
             assert rows[i]["status"] is None, (engine, i)
@@ -215,33 +215,46 @@ def test_cc_star_matches_labelprop_on_random_graphs(spark):
         assert star == prop, f"trial {trial}"
 
 
-# ------------------- salted state continuation + streaming (judge #9)
+# ------------------- hot-key state continuation + streaming (judge #9)
 def _fold_state_docs(spark, store):
     return {r["qid"]: r.asDict(recursive=True)
             for r in store.read(spark).collect()}
 
 
-def test_salted_state_continuation_equals_plain(spark, tmp_path):
-    """merge_with_state with salt_hot_keys=True (seed rows restored
-    inside the salted partial phase) is bit-identical to the plain
-    seeded fold, across two state batches with planted hot keys."""
+def test_state_continuation_3_batches_equals_1_batch(spark, tmp_path):
+    """Each url's lines cut in line order into three state batches, so
+    every doc (the planted hot keys included) continues from its
+    committed form through seed rows, leave the same state as one batch
+    over all the lines."""
+    from pyspark.sql import Window
+
     from log_ship_elastic_postfix_spark import datagen
     from log_ship_elastic_postfix_spark.operators.state import StateStore
     from log_ship_elastic_postfix_spark.plans.pipeline import (
-        PipelineConfig, run_pipeline)
+        PipelineConfig, run_batch)
+    from log_ship_elastic_postfix_spark.sources.pages import pages_to_lines
 
     pages = datagen.generate_pages(spark, 40, n_hot=3, hot_lines=48,
                                    n_partitions=2)
-    stores = {}
-    for label, salt in (("plain", False), ("salted", True)):
-        store = StateStore(str(tmp_path / f"state_{label}"))
-        cfg = PipelineConfig(n_batches=3, salt_hot_keys=salt, n_salts=4)
-        run_pipeline(spark, pages, cfg, state=store)
-        stores[label] = _fold_state_docs(spark, store)
-    plain, salted = stores["plain"], stores["salted"]
-    assert set(plain) == set(salted)
-    for qid in plain:
-        p, s = plain[qid], salted[qid]
+    lines = pages_to_lines(pages)
+    cut = lines.withColumn("batch_seq", F.ntile(3).over(
+        Window.partitionBy("url").orderBy("line_no")) - 1).cache()
+    spans = cut.groupBy("url").agg(
+        F.countDistinct("batch_seq").alias("n")).filter("n = 3").count()
+    assert spans >= 3  # at least the hot urls continue across batches
+
+    cfg = PipelineConfig()
+    one = StateStore(str(tmp_path / "state_1"))
+    run_batch(spark, lines, cfg, batch_seq=0, state=one)
+    three = StateStore(str(tmp_path / "state_3"))
+    for b in range(3):
+        run_batch(spark, cut.filter(F.col("batch_seq") == b), cfg,
+                  batch_seq=b, state=three)
+    one, three = _fold_state_docs(spark, one), _fold_state_docs(spark, three)
+    assert set(one) == set(three)
+    assert max(d["n_events"] for d in one.values()) >= 48
+    for qid in one:
+        p, s = one[qid], three[qid]
         assert p["n_events"] == s["n_events"], qid
         assert p["isFinal"] == s["isFinal"], qid
         assert p["events"] == s["events"], qid
@@ -251,11 +264,11 @@ def test_salted_state_continuation_equals_plain(spark, tmp_path):
 
 
 @pytest.mark.timeout(300)
-def test_stream_salted_checkpoint_restart(spark, tmp_path):
-    """Checkpoint-restart streaming with salt_hot_keys=True and planted
-    hot keys: wave 2 arrives after a down period, the restarted query
-    processes exactly the new files, and the salted state equals a
-    one-shot plain batch run over everything."""
+def test_stream_hot_key_checkpoint_restart(spark, tmp_path):
+    """Checkpoint-restart streaming with planted hot keys: wave 2
+    arrives after a down period, the restarted query processes exactly
+    the new files, and the streamed state equals a one-shot batch run
+    over everything."""
     from log_ship_elastic_postfix_spark import datagen
     from log_ship_elastic_postfix_spark.operators.state import StateStore
     from log_ship_elastic_postfix_spark.plans.pipeline import (
@@ -272,7 +285,7 @@ def test_stream_salted_checkpoint_restart(spark, tmp_path):
     wave2 = all_pages.subtract(wave1)
     wave1.write.mode("overwrite").parquet(pages_path)
 
-    cfg = PipelineConfig(salt_hot_keys=True, n_salts=4)
+    cfg = PipelineConfig()
     store = StateStore(str(tmp_path / "state"))
     bm = BookmarkStore(str(tmp_path / "bm"))
     ckpt = str(tmp_path / "ckpt")

@@ -498,7 +498,7 @@ def test_domain_cap_under_cap_passthrough_uncapped(spark):
 
 def test_domain_cap_salted_and_join_strategy_invariant(spark):
     """salted ≡ unsalted ≡ shuffle-join fallback: identical kept sets
-    (the assemble_salted ≡ assemble contract, applied here)."""
+    (salting only spreads the top-cap sort; it must not change it)."""
     from log_ship_elastic_postfix_spark.operators import domains
     df = _pages(spark)
 

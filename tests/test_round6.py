@@ -131,3 +131,64 @@ def test_null_vector_rows_score_zero_not_crash(spark):
         n_blocks=2).collect()
     got = {r["vec_id"]: r["dropped"] for r in sem}
     assert got[1] is True and got[2] is False
+
+
+def test_ann_topk_dot_null_embedding_matches_oracle(spark, tmp_path):
+    """A NULL embedding gives NULL dots, as DuckDB's list_dot_product
+    does, instead of failing the task: the NULL neighbour sorts last
+    under ``dot desc`` on both engines, and a NULL query vector ranks
+    its neighbours by id alone."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    vecs = [[0.5, 0.25, 0.0, 1.0], [0.125, 0.5, 0.75, 0.0], None,
+            [1.0, 1.0, 0.5, 0.25], [0.0, 0.0, 0.25, 0.5],
+            [0.75, 0.0, 1.0, 0.125]]
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32()))}),
+        str(tmp_path / "embeddings.parquet"))
+
+    def rows(pdf):
+        return sorted(
+            tuple(None if pd.isna(v) else int(v) for v in r)
+            for r in pdf[["query_id", "nbr_id", "dot", "rank"]]
+            .itertuples(index=False))
+
+    got = rows(entry.queries()["ann_topk_dot"](
+        spark, str(tmp_path)).toPandas())
+    con = duckdb.connect()
+    con.execute("create view embeddings as select * from "
+                f"'{tmp_path / 'embeddings.parquet'}'")
+    want = rows(con.sql(entry.oracle_sql()["ann_topk_dot"]).df())
+    assert got == want
+    # every query ranks all 5 neighbours; the NULL one comes last
+    assert len(got) == 6 * 5
+    assert all(r[2] is None for r in got if 2 in r[:2])
+    assert all(r[3] == 5 for r in got if r[1] == 2)
+
+
+def test_bullet_line_ratio_breaks_lines_on_newline_only(spark):
+    r"""Lines start only after "\n", as the denominator's split and the
+    oracle's string_split(text, chr(10)) have it: a bullet after a bare
+    "\r", U+0085 or U+2028 starts no line; CRLF ends one like "\n"."""
+    from log_ship_elastic_postfix_spark.functions.textstats import (
+        bullet_line_ratio)
+
+    texts = ["- a\r\n- b\r\nc",
+             "x\r- no\n* y",
+             "x\u2028- no\n  • z\nw",
+             "\u0085- no\n-"]
+
+    def want(t):
+        lines = t.split("\n")
+        return sum(l.lstrip(" ")[:1] in ("-", "*", "•")
+                   for l in lines) / len(lines)
+
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = [r[0] for r in df.select(bullet_line_ratio(F.col("text")))
+           .collect()]
+    assert got == [want(t) for t in texts] == [2 / 3, 1 / 2, 1 / 3, 1 / 2]
