@@ -38,7 +38,7 @@ _STOPS = ", ".join(f"'{w}'" for w in textstats.EN_STOPWORDS)
 
 # exact all-pairs word-3-gram Jaccard ≥ 0.5 over documents — ground
 # truth for both LSH near-dup paths (shingle semantics mirror
-# operators.dedup.shingles: normalized text, distinct 3-grams)
+# tests/dedup_reference.shingles: normalized text, distinct 3-grams)
 _JACCARD_PAIRS_SQL = (
     "with t as (select doc_id, string_split(trim(regexp_replace("
     "lower(text), '\\s+', ' ', 'g')), ' ') as toks from documents), "
@@ -479,10 +479,7 @@ def q_minhash_neardup(spark, sf_dir):
     recall check the round-1 verdict asked for, as a value-hash
     equality instead of a separate metric."""
     d = _t(spark, sf_dir, "documents")
-    # small demo corpus: opt into the broadcast verify fast path (the
-    # operator's default is the scale-safe shuffle join)
-    return (dedup.near_duplicates_minhash(d, threshold=0.5,
-                                          broadcast_shingles=True)
+    return (dedup.near_duplicates_minhash(d, threshold=0.5)
             .orderBy("id_a", "id_b"))
 
 
@@ -505,8 +502,7 @@ def q_simhash_neardup(spark, sf_dir):
     # restrict_to_candidates=False: this corpus is already capped at
     # 1000 docs, so the verify's candidate semi-join is pure overhead
     return (dedup.simhash_verified_near_duplicates(
-        d, threshold=0.5, n_tables=8, broadcast_shingles=True,
-        restrict_to_candidates=False)
+        d, threshold=0.5, n_tables=8, restrict_to_candidates=False)
         .orderBy("id_a", "id_b"))
 
 
@@ -516,8 +512,7 @@ def q_neardup_clusters(spark, sf_dir):
     pipeline actually applies). Oracle: DuckDB recursive-CTE
     reachability over the exact all-pairs set."""
     d = _t(spark, sf_dir, "documents")
-    pairs = dedup.near_duplicates_minhash(d, threshold=0.5,
-                                          broadcast_shingles=True) \
+    pairs = dedup.near_duplicates_minhash(d, threshold=0.5) \
         .select("id_a", "id_b")
     return dedup.connected_components(pairs).orderBy("id")
 
@@ -544,12 +539,8 @@ def q_embedding_neardup(spark, sf_dir):
                            .otherwise(x)))
                        .alias("embedding")))
     un = e.unionByName(planted)
-    # small demo corpus: opt into the broadcast vector-join fast path
-    # (the minhash broadcast_shingles pattern; scale default is the
-    # shuffle join)
     return (similarity.embedding_near_duplicates(
-        un, threshold=0.95, n_tables=16, n_bits=12,
-        broadcast_vectors=True)
+        un, threshold=0.95, n_tables=16, n_bits=12)
         .orderBy("id_a", "id_b"))
 
 
@@ -813,19 +804,15 @@ def q_clean_corpus(spark, sf_dir):
                .select((F.col("doc_id") + 10000).alias("doc_id"), "text"))
     un = d.unionByName(planted)
     res = clean_corpus(un, CorpusCleanConfig(
-        neardup_threshold=0.5, quality_min_words=10,
-        broadcast_shingles=True))
+        neardup_threshold=0.5, quality_min_words=10))
     return res.docs.select("doc_id").orderBy("doc_id")
 
 
 def q_clean_corpus_scale(spark, sf_dir):
-    """The SAME composed chain at the SCALE configuration — shuffle-
-    join Jaccard verify (broadcast_shingles=False, the 100 TB default),
-    star connected components, no per-stage drop accounting
-    (collect_counts=False) — against the same SQL oracle. Proves the
-    scale path end-to-end composed under the hash gate, not just the
-    demo broadcast path (round-3 judge: the flagship chain was only
-    verified at demo scale/config)."""
+    """The SAME composed chain with no per-stage drop accounting
+    (collect_counts=False) — the only difference from
+    :func:`q_clean_corpus` — against the same SQL oracle: only the
+    shuffle-boundary stages checkpoint and no count actions run."""
     from log_ship_elastic_postfix_spark.plans.corpus import (
         CorpusCleanConfig, clean_corpus)
 
@@ -835,7 +822,7 @@ def q_clean_corpus_scale(spark, sf_dir):
     un = d.unionByName(planted)
     res = clean_corpus(un, CorpusCleanConfig(
         neardup_threshold=0.5, quality_min_words=10,
-        broadcast_shingles=False, collect_counts=False))
+        collect_counts=False))
     return res.docs.select("doc_id").orderBy("doc_id")
 
 

@@ -13,8 +13,9 @@ standard corpus-dedup toolbox; each operator here is expressible at
 - SimHash: 64-bit weighted-projection fingerprint; near-dups collide
   on bit-slice keys (pigeonhole: hamming ≤ n_tables−1 pairs are
   guaranteed to share ≥1 slice), then exact-verified.
-- n-gram Jaccard: exact verification primitive (used standalone for
-  small candidate sets and as the LSH verifier).
+- n-gram Jaccard: exact verification primitive over distinct gram-id
+  sets (used standalone for small candidate sets and as the LSH
+  verifier).
 
 Degenerate-input rule (the 100 TB killer): documents too short to
 shingle produce a NULL signature and are **excluded from banding** —
@@ -24,17 +25,22 @@ with a logged count (no silent caps): at web scale a bucket with 10⁹
 members is boilerplate collision, not near-duplication, and pairing it
 is O(bucket²).
 
-Physical note: the signature computations (MinHash, SimHash) are
-Arrow-vectorized pandas UDFs. Shingle hashes are composed from cached
-per-token crc32 values with numpy window mixing — one crc32 per
-*unique token per batch* instead of one per shingle occurrence (the
-measured hot spot of round 1). A pure-expression formulation
-(k × transform/array_min) re-evaluates the shingle pipeline once per
-signature slot — Catalyst does not share subexpressions across
-projection fields — and measured ~100× slower at any scale. The
-banding/bucketing/joins around the signatures stay JVM-side.
-Hash functions are deterministic (crc32 + universal-hash mixing),
-never Python's salted ``hash``.
+Physical note: every per-document computation — MinHash bands, the
+SimHash vote and the distinct gram-id sets that the Jaccard verify and
+decontamination compare — runs in ONE Arrow-batched pandas UDF,
+:func:`_shingle_kernel`. It owns the tokenizer (lowercase, whitespace
+split), the fewer-than-n-tokens rule and a per-batch crc32 memo (one
+crc32 per *unique token per batch* instead of one per shingle
+occurrence — the measured hot spot of round 1); each operator passes
+only a small numpy reducer over the token hashes. Shingle hashes are
+universal-hash window mixes of consecutive token hashes mod 2³¹−1;
+64-bit gram ids pack two independent lanes (:func:`_lanes`). A
+pure-expression formulation (k × transform/array_min) re-evaluates
+the shingle pipeline once per signature slot — Catalyst does not
+share subexpressions across projection fields — and measured ~100×
+slower at any scale. The banding/bucketing/joins around the kernel
+stay JVM-side. Hash functions are deterministic (crc32 + universal-
+hash mixing), never Python's salted ``hash``.
 """
 
 from __future__ import annotations
@@ -48,6 +54,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from .similarity import _splitmix64
 
 log = logging.getLogger(__name__)
 
@@ -115,28 +123,6 @@ def duplicate_assignments(df: DataFrame, text_col: str = "text",
             .select(id_col, "keeper_id"))
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle set (distinct), JVM-side — no Python. Used
-    by the exact-Jaccard verifier.
-
-    Built from ``arrays_zip`` of n shifted slices, NOT element_at
-    inside a transform lambda: a lambda capturing the token-array
-    expression embeds (and re-evaluates) the normalize+split tree once
-    per element per position — measured ~50× slower on 54-token docs
-    (Catalyst CollapseProject inlines projections into lambdas and has
-    no cross-invocation CSE). With slices, split evaluates n times per
-    row, period."""
-    toks = F.split(normalize_text(text), " ")
-    k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    parts = [F.slice(toks, j + 1, k).alias(f"t{j}") for j in range(n)]
-    grams = F.transform(
-        F.arrays_zip(*parts),
-        lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(n)]),
-    )
-    return F.when(k > 0, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>"))
-
-
 # ------------------------------------------------------------- signatures
 def _token_hashes(toks: list[str], cache: dict) -> np.ndarray:
     """crc32 per token, memoized across the Arrow batch (unique tokens
@@ -153,13 +139,14 @@ def _token_hashes(toks: list[str], cache: dict) -> np.ndarray:
 
 def _shingle_hashes(th: np.ndarray, n: int, coef: np.ndarray) -> np.ndarray:
     """Window-mix n consecutive token hashes into one shingle hash
-    (mod 2³¹−1). min/banding over the multiset equals over the set, so
-    no dedup pass is needed (min is idempotent; band hashing uses the
-    per-slot minima only)."""
+    (mod 2³¹−1) per coefficient row: ``coef`` of shape ``(n,)`` gives
+    ``(m,)`` hashes, ``(lanes, n)`` gives ``(lanes, m)``. min/banding
+    over the multiset equals over the set, so no dedup pass is needed
+    (min is idempotent; band hashing uses the per-slot minima only)."""
     m = len(th) - n + 1
-    acc = np.zeros(m, dtype=np.int64)
+    acc = np.zeros(coef.shape[:-1] + (m,), dtype=np.int64)
     for j in range(n):
-        acc = (acc + coef[j] * th[j:j + m]) % _MERSENNE31
+        acc = (acc + coef[..., j, None] * th[j:j + m]) % _MERSENNE31
     return acc
 
 
@@ -171,17 +158,58 @@ _SHINGLE_COEF = np.array([2654435761 % _MERSENNE31,
 
 
 def _coef(n: int) -> np.ndarray:
-    """First ``n`` window-mix coefficients — the published five, then
-    a deterministic (c·31 + 17) mod p extension for wider grams (the
-    simhash hi-lane derivation rule). The r6 gram-hash kernel first
-    shipped with a bare ``_SHINGLE_COEF[:n]`` slice, which silently
-    truncates to 5 and then INDEXES OUT OF BOUNDS for the operator's
-    own n=8 default — caught by scripts/dedup_bench.py's 8-gram run
-    (the driver query uses n=5, so the oracle never exercised it)."""
+    """First ``n`` window-mix coefficients of the low lane — the
+    published five, then a deterministic (c·31 + 17) mod p extension
+    for wider grams. The r6 gram-hash kernel first shipped with a bare
+    ``_SHINGLE_COEF[:n]`` slice, which silently truncates to 5 and then
+    INDEXES OUT OF BOUNDS for the operator's own n=8 default — caught
+    by scripts/dedup_bench.py's 8-gram run (the driver query uses n=5,
+    so the oracle never exercised it)."""
     base = list(_SHINGLE_COEF)
     while len(base) < n:
         base.append(int(base[-1] * 31 + 17) % _MERSENNE31)
     return np.array(base[:n], dtype=np.int64)
+
+
+def _lanes(n: int) -> np.ndarray:
+    """``(2, n)`` window-mix coefficients of the 64-bit gram hash: the
+    :func:`_coef` low lane and a high lane of splitmix64 outputs
+    reduced mod p. The lanes are independent — a high lane derived
+    from the low one collides whenever the low lane does and the
+    coefficient offsets cancel."""
+    hi = [_splitmix64(0xD1B54A32D192ED03 + j) % _MERSENNE31 or 1
+          for j in range(n)]
+    return np.stack([_coef(n), np.array(hi, dtype=np.int64)])
+
+
+def _hash64(th: np.ndarray, lanes: np.ndarray) -> np.ndarray:
+    """64-bit gram hashes: the two 31-bit window mixes of
+    :func:`_lanes` packed high/low."""
+    lo, hi = _shingle_hashes(th, lanes.shape[1], lanes).astype(np.uint64)
+    return lo | (hi << np.uint64(32))
+
+
+def _shingle_kernel(n: int, out_type: str, short_value, per_doc):
+    """The dedup family's one per-document kernel: lowercase
+    whitespace tokenization, ``short_value`` for documents with fewer
+    than ``n`` tokens (NULL text included), and ``per_doc(th)`` over
+    the token crc32s otherwise, memoized per Arrow batch. Returns the
+    UDF to apply to a text column."""
+
+    @pandas_udf(out_type)
+    def kernel(texts: pd.Series) -> pd.Series:
+        cache: dict = {}
+        out = []
+        for t in texts:
+            toks = (t or "").lower().split()
+            out.append(short_value if len(toks) < n
+                       else per_doc(_token_hashes(toks, cache)))
+        return pd.Series(out, dtype=object)
+
+    # non-deterministic marking stops the optimizer duplicating the
+    # kernel below pushed filters/generators (guide §4.4 — measured
+    # 4 ArrowEvalPython nodes for one call)
+    return kernel.asNondeterministic()
 
 
 def minhash_band_buckets(text_col: Column, k: int = 32,
@@ -216,29 +244,16 @@ def minhash_band_buckets(text_col: Column, k: int = 32,
     coef = _coef(n_shingle)
     mix = np.uint64(0x9E3779B97F4A7C15)
 
-    @pandas_udf("array<long>")
-    def sigb(texts: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for t in texts:
-            toks = (t or "").lower().split()
-            if len(toks) < n_shingle:
-                out.append(None)
-                continue
-            sh = _shingle_hashes(_token_hashes(toks, cache),
-                                 n_shingle, coef)
-            vals = (a[:, None] * sh[None, :] + b[:, None]) % _MERSENNE31
-            mins = vals.min(axis=1).astype(np.uint64).reshape(bands, rows)
-            h = np.zeros(bands, dtype=np.uint64)
-            for j in range(rows):  # xor-multiply avalanche per slot
-                h = (h ^ mins[:, j]) * mix
-            out.append(h.astype(np.int64).tolist())
-        return pd.Series(out, dtype=object)
+    def bands_of(th):
+        sh = _shingle_hashes(th, n_shingle, coef)
+        vals = (a[:, None] * sh[None, :] + b[:, None]) % _MERSENNE31
+        mins = vals.min(axis=1).astype(np.uint64).reshape(bands, rows)
+        h = np.zeros(bands, dtype=np.uint64)
+        for j in range(rows):  # xor-multiply avalanche per slot
+            h = (h ^ mins[:, j]) * mix
+        return h.astype(np.int64).tolist()
 
-    # non-deterministic marking stops the optimizer duplicating the
-    # kernel below pushed filters/generators (guide §4.4 — measured
-    # 4 ArrowEvalPython nodes for one call)
-    return sigb.asNondeterministic()(text_col)
+    return _shingle_kernel(n_shingle, "array<long>", None, bands_of)(text_col)
 
 
 _BIT_POSITIONS = np.arange(64, dtype=np.uint64)
@@ -246,37 +261,43 @@ _BIT_WEIGHTS = (np.uint64(1) << _BIT_POSITIONS).astype(np.int64)
 
 
 def simhash64(text_col: Column, n_shingle: int = 2) -> Column:
-    """64-bit SimHash over word shingles: per-bit majority vote of
-    64-bit shingle hashes (two independent 31-bit window mixes packed
-    high/low), one numpy pass per Arrow batch. Documents too short to
-    shingle return NULL (see module docstring)."""
-    coef_lo = _coef(n_shingle)
-    coef_hi = np.array([(c * 31 + 17) % _MERSENNE31 for c in coef_lo],
-                       dtype=np.int64)
+    """64-bit SimHash over word shingles: per-bit majority vote of the
+    :func:`_hash64` gram hashes. Documents too short to shingle return
+    NULL (see module docstring)."""
+    lanes = _lanes(n_shingle)
 
-    @pandas_udf("long")
-    def sig(texts: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for t in texts:
-            toks = (t or "").lower().split()
-            if len(toks) < n_shingle:
-                out.append(None)
-                continue
-            th = _token_hashes(toks, cache)
-            lo = _shingle_hashes(th, n_shingle, coef_lo).astype(np.uint64)
-            hi = _shingle_hashes(th, n_shingle, coef_hi).astype(np.uint64)
-            h = lo | (hi << np.uint64(32))
-            bits = ((h[:, None] >> _BIT_POSITIONS[None, :]) & 1).astype(np.int64)
-            votes = (bits * 2 - 1).sum(axis=0)
-            packed = int(((votes > 0).astype(np.int64) * _BIT_WEIGHTS).sum())
-            out.append(packed)
-        return pd.Series(out, dtype=object)
+    def vote(th):
+        h = _hash64(th, lanes)
+        bits = ((h[:, None] >> _BIT_POSITIONS[None, :]) & 1).astype(np.int64)
+        votes = (bits * 2 - 1).sum(axis=0)
+        return int(((votes > 0).astype(np.int64) * _BIT_WEIGHTS).sum())
 
-    # non-deterministic marking stops the optimizer duplicating the
-    # kernel below pushed filters/generators (guide §4.4 — measured
-    # 4 ArrowEvalPython nodes for one call)
-    return sig.asNondeterministic()(text_col)
+    return _shingle_kernel(n_shingle, "long", None, vote)(text_col)
+
+
+def _gram_hashes64(text_col: Column, n: int) -> Column:
+    """DISTINCT 64-bit :func:`_hash64` ids of a document's word
+    ``n``-grams as one sorted ``array<long>`` (empty for documents with
+    fewer than ``n`` tokens). Operators that only compare gram
+    IDENTITIES — the Jaccard verify and decontamination — join or
+    intersect these instead of gram strings.
+
+    Contract: the id-set sizes (and the intersection/union sizes of
+    two docs' sets) equal the gram-string set sizes unless two
+    distinct grams share an id. That needs either (a) two distinct
+    tokens whose crc32s are congruent mod p = 2³¹−1 at the same gram
+    position — a vocabulary of V tokens holds about V²·2⁻³² such token
+    pairs (≈0.02 at V = 10⁴, ≈2 at 10⁵), each merging only grams that
+    differ in such tokens alone; or (b) both independent 31-bit lanes
+    colliding at once, ≈2⁻⁶² per gram pair — g_a·g_b·2⁻⁶² expected
+    false matches between sets of g_a and g_b grams (≈0.2 for 10¹²
+    corpus grams against a 10⁶-gram benchmark)."""
+    lanes = _lanes(n)
+
+    def gram_set(th):
+        return np.unique(_hash64(th, lanes).astype(np.int64)).tolist()
+
+    return _shingle_kernel(n, "array<long>", [], gram_set)(text_col)
 
 
 # ----------------------------------------------------------------- LSH
@@ -361,63 +382,29 @@ def minhash_lsh_candidates(
                              label="minhash-lsh")
 
 
-def _shingle_strings(text_col: Column, n: int) -> Column:
-    """The same distinct word n-gram STRING set :func:`shingles`
-    produces, built in one Arrow batch pass instead of the interpreted
-    arrays_zip/transform expression tree (measured ~2.7 core-ms per
-    doc interpreted vs ~0.05 here). Same tokenization as
-    :func:`minhash_band_buckets`; first-occurrence order like
-    array_distinct (order never reaches results — only intersection /
-    union SIZES do)."""
-
-    @pandas_udf("array<string>")
-    def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            toks = (t or "").lower().split()
-            if len(toks) < n:
-                out.append([])
-                continue
-            out.append(list(dict.fromkeys(
-                " ".join(toks[i:i + n])
-                for i in range(len(toks) - n + 1))))
-        return pd.Series(out, dtype=object)
-
-    # non-deterministic marking stops the optimizer duplicating the
-    # kernel below pushed filters/generators (guide §4.4 — measured
-    # 4 ArrowEvalPython nodes for one call)
-    return sh.asNondeterministic()(text_col)
-
-
 def jaccard_pairs(
     df: DataFrame, pairs: DataFrame, *, text_col: str = "text",
     id_col: str = "doc_id", n_shingle: int = 3, threshold: float = 0.7,
-    broadcast_shingles: bool = False,
     restrict_to_candidates: bool = True,
 ) -> DataFrame:
-    """Exact n-gram Jaccard verification of candidate pairs.
+    """Exact n-gram Jaccard verification of candidate pairs, over each
+    document's distinct gram-id set (:func:`_gram_hashes64` — set sizes
+    equal the gram-string sizes under its collision contract).
 
-    The default (``broadcast_shingles=False``) is the scale-safe
-    shuffle join keyed by id: each shingle set moves once per joined
-    side, never an all-pairs stage — at 100 TB the full (id,
-    shingle-set) corpus frame cannot be a broadcast build side.
-    ``broadcast_shingles=True`` is the small-corpus fast path (demo /
-    test scale): broadcasting the shingle frame into both joins keeps
-    the candidate pairs from shuffling at all. Callers opt IN to the
-    broadcast when they know the corpus is small; the default never
-    silently exceeds driver memory.
-
-    Either way the shingle frame is persisted so the shingle UDF runs
-    ONCE per verify, not once per join side (both join builds would
-    otherwise recompute it — it is the verify stage's entire cost).
-    The verified pairs are eagerly ``localCheckpoint``-ed so the
-    persist is released before returning (pairs are two longs + a
-    double per row; the shingle cache must not outlive the verify —
-    repeated calls in clean_corpus/bench/streaming would otherwise
-    accumulate cached storage for the driver's lifetime).
+    The gram-set frame joins both pair sides by id; the planner picks
+    the join (a broadcast while the frame is under Spark's broadcast
+    threshold, the id-keyed shuffle join above it — never an all-pairs
+    stage). The frame is persisted so the kernel runs ONCE per verify,
+    not once per join side (both join builds would otherwise recompute
+    it — it is the verify stage's entire cost). The verified pairs are
+    eagerly ``localCheckpoint``-ed so the persist is released before
+    returning (pairs are two longs + a double per row; the cache must
+    not outlive the verify — repeated calls in clean_corpus/bench/
+    streaming would otherwise accumulate cached storage for the
+    driver's lifetime).
 
     Only documents that actually APPEAR in a candidate pair are
-    shingled: the verify set after LSH is a sliver of the corpus, and
+    hashed: the verify set after LSH is a sliver of the corpus, and
     the r5 shape paid the (interpreted, per-gram) shingle expression
     over every document — the measured majority of the whole near-dup
     query. The id semi-join is exchange-cheap (candidate ids are a
@@ -429,16 +416,15 @@ def jaccard_pairs(
                     .distinct())
         base = df.join(cand_ids, id_col, "left_semi")
     sh = (base.select(F.col(id_col),
-                      _shingle_strings(F.col(text_col), n_shingle)
+                      _gram_hashes64(F.col(text_col), n_shingle)
                       .alias("sh"))).persist()
     try:
         a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
         b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-        if broadcast_shingles:
-            a, b = F.broadcast(a), F.broadcast(b)
         joined = pairs.join(a, "id_a").join(b, "id_b")
         inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
+        # both sets are distinct by construction: |A∪B| = |A|+|B|−|A∩B|
+        union = F.size("sh_a") + F.size("sh_b") - inter
         jac = F.when(union > 0,
                      inter.cast("double") / union).otherwise(F.lit(0.0))
         verified = (joined
@@ -453,7 +439,6 @@ def near_duplicates_minhash(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     n_shingle: int = 3, k: int = 32, bands: int = 8, threshold: float = 0.7,
     max_bucket_size: int = DEFAULT_MAX_BUCKET,
-    broadcast_shingles: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
 
@@ -466,8 +451,7 @@ def near_duplicates_minhash(
         df, text_col=text_col, id_col=id_col, n_shingle=n_shingle,
         k=k, bands=bands, max_bucket_size=max_bucket_size)
     return jaccard_pairs(df, cand, text_col=text_col, id_col=id_col,
-                         n_shingle=n_shingle, threshold=threshold,
-                         broadcast_shingles=broadcast_shingles)
+                         n_shingle=n_shingle, threshold=threshold)
 
 
 def simhash_candidates(
@@ -616,49 +600,11 @@ def connected_components(
         f"connected_components did not converge in {max_iter} iterations")
 
 
-def connected_components_labelprop(
-    pairs: DataFrame, *, id_a: str = "id_a", id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Reference implementation: plain min-label propagation
-    (O(component-diameter) rounds — kept for differential testing of
-    the star algorithm; production uses :func:`connected_components`)."""
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(
-                 pairs.select(F.col(id_b).alias("src"),
-                              F.col(id_a).alias("dst")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels, edges["dst"] == labels["id"])
-                   .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(nbr_min, labels["id"] == nbr_min["src"],
-                                  "left")
-                      .select(F.col("id"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nbr_label"),
-                                                 F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint(eager=True))
-        n_changed = (new_labels.alias("n")
-                     .join(labels.alias("o"), "id")
-                     .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if n_changed == 0:
-            return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations")
-
-
 def simhash_verified_near_duplicates(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     n_shingle_sim: int = 2, n_shingle_jac: int = 3, n_tables: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int = DEFAULT_MAX_BUCKET,
-    broadcast_shingles: bool = False,
     restrict_to_candidates: bool = True,
 ) -> DataFrame:
     """Production simhash path: simhash-slice candidates → exact
@@ -675,7 +621,6 @@ def simhash_verified_near_duplicates(
         n_tables=n_tables, max_bucket_size=max_bucket_size)
     return jaccard_pairs(df, cand, text_col=text_col, id_col=id_col,
                          n_shingle=n_shingle_jac, threshold=threshold,
-                         broadcast_shingles=broadcast_shingles,
                          restrict_to_candidates=restrict_to_candidates)
 
 
@@ -737,48 +682,6 @@ def boilerplate_line_dedup(
 
 
 # ------------------------------------------ benchmark decontamination
-def _gram_hashes64(text_col: Column, n: int) -> Column:
-    """DISTINCT 64-bit hashes of a document's word ``n``-grams as one
-    ``array<long>`` — the :func:`simhash64` construction (two
-    independent 31-bit window mixes over cached per-token crc32s,
-    packed hi/lo), one Arrow batch pass, uniqued per doc in numpy.
-
-    This replaces the JVM ``xxhash64(explode(shingles(...)))``
-    pipeline for operators that only compare gram IDENTITIES
-    (decontamination): the interpreted shingle expression
-    (arrays_zip + transform + array_distinct) was the measured
-    bottleneck (~8.5 s of a 12.9 s query at 50k docs), and per-doc
-    uniqueness here makes the downstream ``(id, hash) DISTINCT``
-    exchange unnecessary. Same tokenization rule as
-    :func:`minhash_band_buckets` (lowercase whitespace split); the
-    64-bit space keeps corpus-scale collision odds negligible, the
-    same contract the xxhash64 form relied on."""
-    coef_lo = _coef(n)
-    coef_hi = np.array([(c * 31 + 17) % _MERSENNE31 for c in coef_lo],
-                       dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def gh(texts: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for t in texts:
-            toks = (t or "").lower().split()
-            if len(toks) < n:
-                out.append([])
-                continue
-            th = _token_hashes(toks, cache)
-            lo = _shingle_hashes(th, n, coef_lo).astype(np.uint64)
-            hi = _shingle_hashes(th, n, coef_hi).astype(np.uint64)
-            out.append(np.unique(
-                (lo | (hi << np.uint64(32))).astype(np.int64)).tolist())
-        return pd.Series(out, dtype=object)
-
-    # non-deterministic marking stops the optimizer duplicating the
-    # kernel below pushed filters/generators (guide §4.4 — measured
-    # 4 ArrowEvalPython nodes for one call)
-    return gh.asNondeterministic()(text_col)
-
-
 def benchmark_contamination(
     df: DataFrame, benchmark: DataFrame, *, text_col: str = "text",
     id_col: str = "doc_id", bench_text_col: str = "text", n: int = 8,

@@ -350,16 +350,11 @@ def ivf_topk(
 def embedding_near_duplicates(
     df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
     dim: int = 64, threshold: float = 0.95, n_tables: int = 8, n_bits: int = 6,
-    broadcast_vectors: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b) above threshold,
-    via the LSH candidate path; vectors join in after the id dedup.
-
-    ``broadcast_vectors=True`` is the small-corpus fast path (the
-    ``jaccard_pairs``/``broadcast_shingles`` contract): both vector
-    joins build as broadcasts, so candidate pairs never shuffle. The
-    default stays the scale-safe shuffle join — at 100 TB the vector
-    table cannot be a broadcast build side."""
+    via the LSH candidate path; vectors join in after the id dedup
+    (the planner picks broadcast or shuffle joins by the vector
+    table's size)."""
     pairs = _candidate_id_pairs(
         df, id_col=id_col, vec_col=vec_col, dim=dim,
         n_tables=n_tables, n_bits=n_bits, symmetric=True)
@@ -367,8 +362,6 @@ def embedding_near_duplicates(
                    F.col(vec_col).alias("vec_a"))
     vb = df.select(F.col(id_col).alias("id_b"),
                    F.col(vec_col).alias("vec_b"))
-    if broadcast_vectors:
-        va, vb = F.broadcast(va), F.broadcast(vb)
     return (pairs.join(va, "id_a").join(vb, "id_b")
             .withColumn("score", F.round(
                 _cosine_batch(F.col("vec_a"), F.col("vec_b")), 6))

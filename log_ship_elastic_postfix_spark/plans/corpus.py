@@ -75,7 +75,6 @@ class CorpusCleanConfig:
     classifier_threshold_micro: Optional[int] = None
     classifier_weights: Optional[DataFrame] = None
     classifier_bias_micro: int = 0
-    broadcast_shingles: bool = False          # small-corpus fast path
     # per-stage drop accounting (the corpus-paper stage_counts table).
     # True: every stage is eagerly checkpointed AND counted — one
     # count action per stage, bounded driver metadata. False: no count
@@ -143,8 +142,7 @@ def clean_corpus(df: DataFrame, cfg: CorpusCleanConfig) -> CleanResult:
     if cfg.neardup_threshold is not None:
         pairs = dedup.near_duplicates_minhash(
             cur, text_col=text_c, id_col=id_c, k=cfg.minhash_k,
-            bands=cfg.minhash_bands, threshold=cfg.neardup_threshold,
-            broadcast_shingles=cfg.broadcast_shingles)
+            bands=cfg.minhash_bands, threshold=cfg.neardup_threshold)
         labels = dedup.connected_components(pairs.select("id_a", "id_b"))
         losers = (labels.filter(F.col("id") != F.col("cluster_id"))
                   .select(F.col("id").alias(id_c)))

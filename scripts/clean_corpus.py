@@ -11,9 +11,8 @@ near-dup CC → Gopher quality → repetition gate, each stage optional),
 writes the survivors as parquet, and prints ONE JSON line with the
 per-stage drop accounting — the corpus-paper stage_counts table.
 
-Scale defaults: shuffle-join verify (no broadcast), star connected
-components, AQE on. ``--broadcast-shingles`` opts into the small-corpus
-fast path; ``--no-counts`` (collect_counts=False) drops the per-stage
+Star connected components, AQE on; the planner picks the verify
+joins. ``--no-counts`` (collect_counts=False) drops the per-stage
 count actions for pure-throughput runs. ``--shards-out DIR`` finishes
 the job as a trainer handoff: the survivors are also written as a
 training-shard drop (operators.shards layout + per-shard manifest).
@@ -50,7 +49,6 @@ def main() -> None:
     p.add_argument("--quality-min-words", type=int, default=50,
                    help="<=0 disables the Gopher quality gate")
     p.add_argument("--repetition-max", type=float, default=None)
-    p.add_argument("--broadcast-shingles", action="store_true")
     p.add_argument("--no-counts", action="store_true")
     p.add_argument("--shards-out", default=None,
                    help="also write the survivors as a training-shard "
@@ -78,7 +76,6 @@ def main() -> None:
         quality_min_words=(args.quality_min_words
                            if args.quality_min_words > 0 else None),
         repetition_max_frac=args.repetition_max,
-        broadcast_shingles=args.broadcast_shingles,
         collect_counts=not args.no_counts)
 
     t0 = time.monotonic()

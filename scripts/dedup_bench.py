@@ -100,8 +100,8 @@ def main() -> None:
     ld.write.format("noop").mode("overwrite").save()
     line_sec = time.monotonic() - t0
 
-    # composed clean_corpus at the SCALE config (shuffle-join verify,
-    # star-CC — broadcast_shingles stays False): the planted structure
+    # composed clean_corpus at scale (star-CC, planner-chosen verify
+    # joins): the planted structure
     # has a closed form, so the run doubles as a correctness proof of
     # the composition at 20-100× driver scale: exact removes the 1-in-
     # 32 verbatim copies, near-dup CC removes the 1-in-16 mutants
@@ -120,8 +120,7 @@ def main() -> None:
     t0 = time.monotonic()
     res = clean_corpus(corpus, CorpusCleanConfig(
         neardup_threshold=0.6, quality_min_words=None,
-        minhash_k=64, minhash_bands=32,
-        broadcast_shingles=False))
+        minhash_k=64, minhash_bands=32))
     clean_sec = time.monotonic() - t0
     # exact congruence counts (valid for ANY n, not just multiples of
     # 32): mutants are ids ≡ 1 (mod 16), copies ids ≡ 4 (mod 32)

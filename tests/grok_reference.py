@@ -75,7 +75,7 @@ def _grok_batch(pdf: pd.DataFrame, line_col: str, tz: str,
 
     envelope_ok = prog.notna()
     prog_ok = envelope_ok & prog.str.match(PROG_FILTER_RE, na=False)
-    is_postfix = prog.str.startswith("postfix/").fillna(False)
+    is_postfix = prog.str.startswith("postfix/", na=False)
 
     qid = msg.str.extract(QID_RE)[0].where(is_postfix)
     rest = msg.str.extract(MSG_REST_RE)[0].where(is_postfix)
@@ -105,17 +105,17 @@ def _grok_batch(pdf: pd.DataFrame, line_col: str, tz: str,
         # a plain key never takes the angle form; drop accidental <..>
         ser = ser.where(~ser.str.startswith("<", na=False))
         if rwide is not None and k in _RMILTER_KEYS:
-            ser = ser.fillna(rwide[k])
+            ser = ser.where(ser.notna(), rwide[k])
         out[k] = ser
     if "status" in want:
         out["status"] = rest.str.extract(r"(?:^|[,\s])status=(.*)$",
                                          expand=True)[0]
 
     if "message" in want:
-        is_bounce = (prog == "postfix/bounce").fillna(False)
+        is_bounce = prog.eq("postfix/bounce")
         out["message"] = rest.where(is_bounce)
     if "msg" in want:
-        is_bounce = (prog == "postfix/bounce").fillna(False)
+        is_bounce = prog.eq("postfix/bounce")
         has_kv = rest.str.contains(r"(?:^|[,\s])[A-Za-z-]+=", na=False)
         out["msg"] = rest.where(is_postfix & ~is_bounce & ~has_kv
                                 & rest.notna() & (rest != ""))
@@ -127,7 +127,7 @@ def _grok_batch(pdf: pd.DataFrame, line_col: str, tz: str,
     if "raw_msg" in want:
         out["raw_msg"] = msg.where(~is_postfix & prog_ok)
 
-    out["qid"] = qid.fillna(queue_id)
+    out["qid"] = qid.where(qid.notna(), queue_id)
 
     reason = pd.Series(pd.NA, index=pdf.index, dtype="object")
     reason = reason.mask(~envelope_ok, "envelope_miss")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from log_ship_elastic_postfix_spark.operators import dedup, similarity
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 
+from dedup_reference import connected_components_labelprop
 from grok_reference import GROK_ENGINES
 
 
@@ -91,22 +92,51 @@ def test_ivf_topk_sparse_offset_ids(spark):
     assert all(r["count"] == 3 for r in got)
 
 
-# ---------------------------------- verify default is scale-safe (ADVICE)
-def test_jaccard_broadcast_default_off_and_equivalent(spark):
-    import inspect
-    assert (inspect.signature(dedup.jaccard_pairs)
-            .parameters["broadcast_shingles"].default is False)
-    texts = [(i, f"the quick brown fox {i % 5} jumps over the lazy dog")
-             for i in range(40)]
-    df = spark.createDataFrame(texts, ["doc_id", "text"])
+# ------------------------- gram-id Jaccard verify == string-set Jaccard
+def test_jaccard_pairs_match_python_string_jaccard(spark):
+    """jaccard_pairs verifies over 64-bit gram-id sets; the scores must
+    equal a pure-Python Jaccard over the distinct word 3-gram STRING
+    sets of the same tokenization, rounded to 6 places — repeated
+    grams, docs shorter than n, NULL and empty text, and CRLF / U+2028
+    / U+0085 whitespace included."""
+    n = 3
+    texts = [f"the quick brown fox {i % 5} jumps over the lazy dog"
+             for i in range(12)]
+    texts += [
+        "a b c a b c a b c",                       # repeated grams
+        "A B C a b c d",
+        "x y",                                     # shorter than n
+        "x  y",
+        None,
+        "",
+        "the\r\nquick brown\u2028fox 0 jumps\u0085over the lazy dog",
+        "One\ttwo\r\nthree FOUR five",
+        "one two three four\u2028five six",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    ids = range(len(texts))
     pairs = spark.createDataFrame(
-        [(i, j) for i in range(0, 40, 5) for j in range(i + 5, 40, 5)],
-        ["id_a", "id_b"])
-    a = dedup.jaccard_pairs(df, pairs, threshold=0.0,
-                            broadcast_shingles=False)
-    b = dedup.jaccard_pairs(df, pairs, threshold=0.0,
-                            broadcast_shingles=True)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+        [(i, j) for i in ids for j in ids if i < j], "id_a long, id_b long")
+
+    def grams(t):
+        toks = (t or "").lower().split()
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+    def jac(a, b):
+        ga, gb = grams(a), grams(b)
+        union = len(ga | gb)
+        return round(len(ga & gb) / union, 6) if union else 0.0
+
+    want = {(i, j): jac(texts[i], texts[j])
+            for i in ids for j in ids if i < j}
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in dedup.jaccard_pairs(df, pairs, n_shingle=n,
+                                        threshold=0.0).collect()}
+    assert got == want
+    # the fixture reaches every branch: full, partial and no overlap
+    assert {0.0, 1.0} <= set(want.values())
+    assert any(0.0 < v < 1.0 for v in want.values())
 
 
 # ---------------------------- per-partition noop suppression (judge #2)
@@ -210,7 +240,7 @@ def test_cc_star_matches_labelprop_on_random_graphs(spark):
         star = {(r["id"], r["cluster_id"])
                 for r in dedup.connected_components(pairs).collect()}
         prop = {(r["id"], r["cluster_id"])
-                for r in dedup.connected_components_labelprop(pairs)
+                for r in connected_components_labelprop(pairs)
                 .collect()}
         assert star == prop, f"trial {trial}"
 
@@ -536,7 +566,7 @@ def test_clean_corpus_stages(spark):
     # stage ever saw them (a real interleaving hazard, now documented)
     res = clean_corpus(df, CorpusCleanConfig(
         url_col="url", line_dedup_min_docs=4, neardup_threshold=0.5,
-        quality_min_words=10, broadcast_shingles=True))
+        quality_min_words=10))
     sc = res.stage_counts
     assert sc["input"] == 7
     assert sc["url_dedup"] == 6    # 2 collapsed into 1

@@ -170,9 +170,8 @@ def test_compact_uses_sibling_swap(spark, tmp_path):
 
 # --------------------------- clean_corpus: compose-at-scale + counts
 def test_clean_corpus_scale_config_planted_counts(spark):
-    """The composed cleaning chain at the SCALE configuration
-    (shuffle-join verify, star-CC, broadcast_shingles=False) on the
-    100k-doc planted corpus: stage counts must equal the plant's
+    """The composed cleaning chain (star-CC, planner-chosen verify
+    joins) on the 100k-doc planted corpus: stage counts must equal the plant's
     closed form — exact removes the 1-in-32 verbatim copies, near-dup
     CC removes the 1-in-16 mutants. LSH is recall-sized to the plant
     (32 bands × 2 rows; mutants sit at jaccard ≈0.73 where the default
@@ -185,7 +184,7 @@ def test_clean_corpus_scale_config_planted_counts(spark):
     docs = db.synth_docs(spark, n).localCheckpoint(eager=True)
     res = clean_corpus(docs, CorpusCleanConfig(
         neardup_threshold=0.6, quality_min_words=None,
-        minhash_k=64, minhash_bands=32, broadcast_shingles=False))
+        minhash_k=64, minhash_bands=32))
     assert res.stage_counts == {
         "input": n,
         "exact_dedup": n - n // 32,
@@ -206,8 +205,7 @@ def test_clean_corpus_collect_counts_off(spark, monkeypatch):
     # patch the CONCRETE class (pyspark.sql.classic.…DataFrame in
     # Spark 4 overrides count; patching the abstract base is a no-op)
     DF = type(docs)
-    cfg = dict(neardup_threshold=0.5, quality_min_words=10,
-               broadcast_shingles=True)
+    cfg = dict(neardup_threshold=0.5, quality_min_words=10)
 
     n_counts = 0
     orig_count = DF.count
@@ -684,8 +682,7 @@ def test_verify_paths_unpersist(spark, monkeypatch):
     monkeypatch.setattr(DF, "persist", track_p)
     monkeypatch.setattr(DF, "unpersist", track_u)
 
-    dedup.near_duplicates_minhash(docs, threshold=0.5,
-                                  broadcast_shingles=True).count()
+    dedup.near_duplicates_minhash(docs, threshold=0.5).count()
     assert n_persists >= 3, "tracking must observe the real persists"
     assert not live, "minhash verify leaked a persisted frame"
 

@@ -49,6 +49,58 @@ def test_minhash_band_buckets_collide_iff_band_equal(spark):
     assert (b0 != b2).any(), "different docs must differ in some band"
 
 
+def test_minhash_band_buckets_pinned(spark):
+    """The tokenizer and the low lane the band buckets hash with are
+    shared with the other dedup kernels; the bucket values are pinned
+    so a change there shows (k=8/bands=4 over 3-grams, and k=4/bands=2
+    over 6-grams, which needs the coefficient extension), and a doc
+    shorter than n_shingle stays NULL."""
+    from log_ship_elastic_postfix_spark.operators import dedup
+
+    texts = ["The quick brown fox jumps over the lazy dog",
+             "lorem ipsum dolor sit amet consectetur adipiscing elit sed do",
+             "a b"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    rows = (df.select(
+        "doc_id",
+        dedup.minhash_band_buckets(F.col("text"), 8, 3, 4).alias("bb"),
+        dedup.minhash_band_buckets(F.col("text"), 4, 6, 2).alias("bb6"))
+        .orderBy("doc_id").collect())
+    assert [(r["bb"], r["bb6"]) for r in rows] == [
+        ([3068866863649535979, 171290526924671849,
+          -5156541991276600236, -1127642486349187061],
+         [-4577404097114422540, -5798340811075664233]),
+        ([-5657394299704550526, -2572578773790845185,
+          -3063864098833065568, -5717230371931668618],
+         [4267166599381043487, 4941884714971095145]),
+        (None, None)]
+
+
+def test_gram_hash_lanes_independent():
+    """The two 31-bit lanes of a 64-bit gram id must collide
+    independently. Token-hash deltas orthogonal to both the low-lane
+    coefficients and (1, 1, 1) make the low lanes of two grams equal;
+    a high lane derived as 31·c + 17 from the low one then collides
+    too (a full 64-bit collision), the independent lane does not."""
+    import numpy as np
+    from log_ship_elastic_postfix_spark.operators import dedup
+
+    p = dedup._MERSENNE31
+    lanes = dedup._lanes(3)
+    c = [int(v) for v in lanes[0]]
+    delta = [(c[1] - c[2]) % p, (c[2] - c[0]) % p, (c[0] - c[1]) % p]
+    x = np.array([p // 2, p // 3, p // 5], dtype=np.int64)
+    y = np.array([(int(v) - d) % p for v, d in zip(x, delta)],
+                 dtype=np.int64)
+    low = np.uint64(0xFFFFFFFF)
+    hx, hy = dedup._hash64(x, lanes), dedup._hash64(y, lanes)
+    assert (hx & low) == (hy & low), "construction must collide the low lane"
+    assert hx != hy
+    derived = np.stack([lanes[0], (lanes[0] * 31 + 17) % p])
+    assert dedup._hash64(x, derived) == dedup._hash64(y, derived)
+
+
 def test_gram_hashes_match_shingle_semantics(spark):
     """_gram_hashes64 emits one hash per DISTINCT word n-gram — the
     count must equal the JVM shingle expression's distinct-gram count
@@ -56,6 +108,7 @@ def test_gram_hashes_match_shingle_semantics(spark):
     operator's own default and needs the coefficient extension beyond
     the published five (it crashed before _coef — caught by the
     8-gram dedup_bench run)."""
+    from dedup_reference import shingles
     from log_ship_elastic_postfix_spark.operators import dedup
 
     long_doc = " ".join(f"w{i % 11}" for i in range(30))
@@ -68,28 +121,10 @@ def test_gram_hashes_match_shingle_semantics(spark):
         got = (df.select(
             "doc_id",
             F.size(dedup._gram_hashes64(F.col("text"), n)).alias("n_hash"),
-            F.size(dedup.shingles(F.col("text"), n)).alias("n_gram"))
+            F.size(shingles(F.col("text"), n)).alias("n_gram"))
             .orderBy("doc_id").collect())
         for r in got:
             assert r["n_hash"] == r["n_gram"], (n, r)
-
-
-def test_shingle_strings_equal_jvm_shingles(spark):
-    """_shingle_strings must produce the identical distinct-gram SET
-    as the JVM shingles expression (the jaccard verify consumes set
-    sizes)."""
-    from log_ship_elastic_postfix_spark.operators import dedup
-
-    df = spark.createDataFrame(
-        [(1, "The  Quick brown fox  the quick brown"), (2, "a b"),
-         (3, "x y z w v"), (4, "")], ["doc_id", "text"])
-    rows = (df.select(
-        "doc_id",
-        dedup._shingle_strings(F.col("text"), 3).alias("py"),
-        dedup.shingles(F.col("text"), 3).alias("jvm"))
-        .orderBy("doc_id").collect())
-    for r in rows:
-        assert sorted(r["py"]) == sorted(r["jvm"]), r
 
 
 def test_normalize_dates_memo_matches_impl():
