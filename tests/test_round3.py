@@ -92,6 +92,34 @@ def test_ivf_topk_sparse_offset_ids(spark):
     assert all(r["count"] == 3 for r in got)
 
 
+# ----------------------------- verify join: no hint, planner-neutral
+def test_jaccard_broadcast_default_off_and_equivalent(spark):
+    """jaccard_pairs forces no broadcast (there is no hint option; the
+    planner picks the verify joins), and the scores do not depend on
+    the join it picks: the planner's broadcast under the default
+    threshold and the shuffle join with broadcasting disabled give the
+    same verified pairs."""
+    import inspect
+    params = inspect.signature(dedup.jaccard_pairs).parameters
+    assert not any("broadcast" in name for name in params)
+    texts = [(i, f"the quick brown fox {i % 5} jumps over the lazy dog")
+             for i in range(40)]
+    df = spark.createDataFrame(texts, ["doc_id", "text"])
+    pairs = spark.createDataFrame(
+        [(i, j) for i in range(0, 40, 5) for j in range(i + 5, 40, 5)],
+        ["id_a", "id_b"])
+    a = dedup.jaccard_pairs(df, pairs, threshold=0.0).collect()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        b = dedup.jaccard_pairs(df, pairs, threshold=0.0).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert len(a) == 28
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
 # ------------------------- gram-id Jaccard verify == string-set Jaccard
 def test_jaccard_pairs_match_python_string_jaccard(spark):
     """jaccard_pairs verifies over 64-bit gram-id sets; the scores must

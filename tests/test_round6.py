@@ -101,6 +101,38 @@ def test_gram_hash_lanes_independent():
     assert dedup._hash64(x, derived) == dedup._hash64(y, derived)
 
 
+def test_shingle_strings_equal_jvm_shingles(spark):
+    """The gram-id set the Jaccard verify consumes must be the JVM
+    shingles expression's distinct-gram SET under the gram hash: each
+    JVM shingle string, re-tokenized and hashed with the same lanes,
+    gives exactly the ids _gram_hashes64 emits for that doc."""
+    import zlib
+
+    import numpy as np
+    from dedup_reference import shingles
+    from log_ship_elastic_postfix_spark.operators import dedup
+
+    n = 3
+    lanes = dedup._lanes(n)
+
+    def gram_id(gram):
+        th = np.array([zlib.crc32(t.encode("utf-8"))
+                       for t in gram.split(" ")], dtype=np.int64)
+        return int(dedup._hash64(th, lanes).astype(np.int64)[0])
+
+    df = spark.createDataFrame(
+        [(1, "The  Quick brown fox  the quick brown"), (2, "a b"),
+         (3, "x y z w v"), (4, "")], ["doc_id", "text"])
+    rows = (df.select(
+        "doc_id",
+        dedup._gram_hashes64(F.col("text"), n).alias("py"),
+        shingles(F.col("text"), n).alias("jvm"))
+        .orderBy("doc_id").collect())
+    for r in rows:
+        assert sorted(r["py"]) == sorted({gram_id(g) for g in r["jvm"]}), r
+    assert [len(r["py"]) for r in rows] == [4, 0, 3, 0]
+
+
 def test_gram_hashes_match_shingle_semantics(spark):
     """_gram_hashes64 emits one hash per DISTINCT word n-gram — the
     count must equal the JVM shingle expression's distinct-gram count
