@@ -432,7 +432,7 @@ def q_ann_topk_dot(spark, sf_dir):
     # Integer sums are order-independent, so results are identical.
     import numpy as _np
     import pandas as _pd
-    from pyspark.sql.functions import pandas_udf as _pudf
+    from log_ship_elastic_postfix_spark.functions.kernel import arrow_kernel
 
     q_rows = (e.filter(F.col("vec_id") < 50).orderBy("vec_id")
               .select("vec_id", "q").collect())
@@ -444,7 +444,7 @@ def q_ann_topk_dot(spark, sf_dir):
     # hintless on purpose: under `from __future__ import annotations`
     # the hints are strings and pyspark's signature inference rejects
     # them (the repetition_stats precedent)
-    @_pudf("array<long>")
+    @arrow_kernel("array<long>")
     def _dots_vs_queries(nv):
         if len(nv) == 0:
             return _pd.Series([], dtype=object)

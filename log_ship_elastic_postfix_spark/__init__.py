@@ -2,14 +2,14 @@
 parse → enrich → route → aggregate log/telemetry pipeline.
 
 Re-expresses the semantics of msimerson/log-ship-elastic-postfix
-(reference at /root/reference, BSD-2-Clause, Node.js) as an idiomatic
-Spark DataFrame program over Common-Crawl-style web-page tables
+(BSD-2-Clause, Node.js) as an idiomatic Spark DataFrame program over
+Common-Crawl-style web-page tables
 ``pages(url, warc_ts, html, text, lang)``:
 
-- syslog envelope + per-program grok grammars → JVM-side
-  ``regexp_extract`` columns (whole-stage codegen, no per-row Python)
-- per-queue-id document assembly → ``groupBy(qid).applyInPandas``
-  sessionizer with salted two-phase fold for hot keys
+- syslog envelope + per-program grok grammars → one Arrow-batched
+  ``mapInArrow`` pass of RE2 kernels (``pyarrow.compute``)
+- per-queue-id document assembly → ``repartition(qid).mapInPandas``:
+  one ordered fold per queue id, a hot key included
 - Redis/ES enrichment lookups → broadcast dimension joins
 - per-index Elasticsearch routing → fan-out partitioned sinks
 - bookmark file → lineage manifest + batch checkpoint table

@@ -1,14 +1,17 @@
 """Text analysis functions for training-data pipelines: language ID,
 quality scoring, token counting, document fingerprinting.
 
-All pure Catalyst expressions — defined once here so the Spark query
-and any external SQL oracle implement the *same* documented rule.
+Pure Catalyst expressions except :func:`repetition_stats`, an Arrow
+kernel — defined once here so the Spark query and any external SQL
+oracle implement the *same* documented rule.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .kernel import arrow_kernel
 
 # deliberately small, documented stopword list — the lang-ID heuristic
 # is "fraction of tokens that are English stopwords"
@@ -180,16 +183,16 @@ def repetition_stats(text: Column) -> Column:
     Catalyst: per-doc n-gram counting is O(tokens) with a hash counter
     but O(tokens²) as higher-order array expressions — at web scale
     the Arrow-batched counter is the honest formulation. Narrow (no
-    shuffle); one batch in, one struct column out."""
+    shuffle); one batch in, one struct column out. NULL text counts as
+    empty: every fraction 0.0."""
     import pandas as pd
     from collections import Counter
-    from pyspark.sql.functions import pandas_udf
 
     # no type hints: under `from __future__ import annotations` the
     # hints are strings and pyspark's signature inference rejects them;
     # hintless scalar pandas_udf with a struct returnType takes the
     # Series → DataFrame path by returnType alone
-    @pandas_udf(REPETITION_SCHEMA)
+    @arrow_kernel(REPETITION_SCHEMA)
     def rep(texts):
         out = {k: [] for k in ("dup_line_frac", "dup_line_char_frac",
                                "top_bigram_char_frac",

@@ -28,13 +28,14 @@ is O(bucket²).
 Physical note: every per-document computation — MinHash bands, the
 SimHash vote and the distinct gram-id sets that the Jaccard verify and
 decontamination compare — runs in ONE Arrow-batched pandas UDF,
-:func:`_shingle_kernel`. It owns the tokenizer (lowercase, whitespace
-split), the fewer-than-n-tokens rule and a per-batch crc32 memo (one
-crc32 per *unique token per batch* instead of one per shingle
-occurrence — the measured hot spot of round 1); each operator passes
-only a small numpy reducer over the token hashes. Shingle hashes are
-universal-hash window mixes of consecutive token hashes mod 2³¹−1;
-64-bit gram ids pack two independent lanes (:func:`_lanes`). A
+:func:`_shingle_kernel`. It owns the tokenizer (lowercase, split on
+the ASCII whitespace of :func:`normalize_text`), the fewer-than-n-tokens
+rule and a per-batch crc32 memo (one crc32 per *unique token per batch*
+instead of one per shingle occurrence — the measured hot spot of round
+1); each operator passes only a small numpy reducer over the token
+hashes. Shingle hashes are universal-hash window mixes of consecutive
+token hashes mod 2³¹−1; 64-bit gram ids pack two independent lanes
+(:func:`_lanes`) and mix them with the splitmix64 finalizer. A
 pure-expression formulation (k × transform/array_min) re-evaluates
 the shingle pipeline once per signature slot — Catalyst does not
 share subexpressions across projection fields — and measured ~100×
@@ -46,6 +47,7 @@ hash mixing), never Python's salted ``hash``.
 from __future__ import annotations
 
 import logging
+import re
 import zlib
 
 import numpy as np
@@ -53,8 +55,8 @@ import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from ..functions.kernel import arrow_kernel
 from .similarity import _splitmix64
 
 log = logging.getLogger(__name__)
@@ -79,10 +81,18 @@ def _is_missing_path(exc: Exception) -> bool:
 DEFAULT_MAX_BUCKET = 1024
 
 
+# token separators: the ASCII class of Java's ``\s``, in regex escapes
+# Java and Python both read (RE2's ``\s``, in the DuckDB oracles, lacks
+# \x0b). Python's ``str.split()`` also splits on NBSP, U+0085, U+2028
+# and \x1c-\x1f; here they stay inside a token.
+_WS = r" \t\n\x0b\f\r"
+_TOKEN = re.compile(f"[^{_WS}]+")
+
+
 def normalize_text(text: Column) -> Column:
     """Canonical form for content comparison: lowercase, collapsed
-    whitespace, trimmed."""
-    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+    ASCII whitespace, trimmed."""
+    return F.trim(F.regexp_replace(F.lower(text), f"[{_WS}]+", " "))
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -182,34 +192,40 @@ def _lanes(n: int) -> np.ndarray:
     return np.stack([_coef(n), np.array(hi, dtype=np.int64)])
 
 
+def _fmix64(x: np.ndarray) -> np.ndarray:
+    """The splitmix64 finalizer over a ``uint64`` array (wrapping
+    arithmetic): a bijection, so it moves no collision."""
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return x ^ (x >> np.uint64(31))
+
+
 def _hash64(th: np.ndarray, lanes: np.ndarray) -> np.ndarray:
     """64-bit gram hashes: the two 31-bit window mixes of
-    :func:`_lanes` packed high/low."""
+    :func:`_lanes` packed high/low, then finalized so all 64 bits are
+    live (the packed value leaves bits 31 and 63 at 0)."""
     lo, hi = _shingle_hashes(th, lanes.shape[1], lanes).astype(np.uint64)
-    return lo | (hi << np.uint64(32))
+    return _fmix64(lo | (hi << np.uint64(32)))
 
 
 def _shingle_kernel(n: int, out_type: str, short_value, per_doc):
     """The dedup family's one per-document kernel: lowercase
-    whitespace tokenization, ``short_value`` for documents with fewer
-    than ``n`` tokens (NULL text included), and ``per_doc(th)`` over
-    the token crc32s otherwise, memoized per Arrow batch. Returns the
-    UDF to apply to a text column."""
+    tokenization on :data:`_WS`, ``short_value`` for documents with
+    fewer than ``n`` tokens (NULL text included), and ``per_doc(th)``
+    over the token crc32s otherwise, memoized per Arrow batch. Returns
+    the UDF to apply to a text column."""
 
-    @pandas_udf(out_type)
+    @arrow_kernel(out_type)
     def kernel(texts: pd.Series) -> pd.Series:
         cache: dict = {}
         out = []
         for t in texts:
-            toks = (t or "").lower().split()
+            toks = _TOKEN.findall((t or "").lower())
             out.append(short_value if len(toks) < n
                        else per_doc(_token_hashes(toks, cache)))
         return pd.Series(out, dtype=object)
 
-    # non-deterministic marking stops the optimizer duplicating the
-    # kernel below pushed filters/generators (guide §4.4 — measured
-    # 4 ArrowEvalPython nodes for one call)
-    return kernel.asNondeterministic()
+    return kernel
 
 
 def minhash_band_buckets(text_col: Column, k: int = 32,

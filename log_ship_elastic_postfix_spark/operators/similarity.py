@@ -26,7 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..functions.kernel import arrow_kernel
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -62,10 +63,9 @@ def _cosine_batch(a: Column, b: Column) -> Column:
     this in for the interpreted expression (measured ~77 µs per
     64-dim cosine: higher-order lambdas never reach codegen) cannot
     move a rounded score by an ulp. Requires uniform vector length
-    within a batch (the operator contract — one embedding space).
-    Defined as a factory: ``pandas_udf`` needs an active session."""
+    within a batch (the operator contract — one embedding space)."""
 
-    @pandas_udf("double")
+    @arrow_kernel("double")
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
         if len(va) == 0:
             return pd.Series([], dtype="float64")
@@ -84,9 +84,7 @@ def _cosine_batch(a: Column, b: Column) -> Column:
         with np.errstate(divide="ignore", invalid="ignore"):
             return pd.Series(np.where(denom > 0, dot / denom, 0.0))
 
-    # asNondeterministic: callers filter on the rounded score; the
-    # pushed filter would otherwise evaluate the kernel twice (§4.4)
-    return cos.asNondeterministic()(a, b)
+    return cos(a, b)
 
 
 def brute_force_topk(
@@ -163,7 +161,9 @@ def lsh_sign_buckets(
 
     One Arrow pandas UDF computing the full (batch × tables·bits) sign
     matrix as a single numpy matmul — the pure-expression form costs
-    n_tables·n_bits interpreted array-aggregate passes per row.
+    n_tables·n_bits interpreted array-aggregate passes per row. A NULL
+    vector is bucketed as the zero vector: every sign bit 1, bucket
+    2^n_bits − 1 in each table.
     """
     planes = np.array([
         _hyperplane(dim, t, b) for t in range(n_tables)
@@ -171,7 +171,7 @@ def lsh_sign_buckets(
     weights = np.array([1 << (n_bits - 1 - b) for b in range(n_bits)],
                        dtype=np.int64)
 
-    @pandas_udf("array<long>")
+    @arrow_kernel("array<long>")
     def buckets(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
@@ -182,11 +182,8 @@ def lsh_sign_buckets(
         vals = (signs * weights[None, None, :]).sum(axis=2)  # (n, T)
         return pd.Series(vals.tolist())
 
-    # asNondeterministic: stop generator/filter pushdown from
-    # duplicating the sign kernel (guide §4.4)
     return (df.select(F.col(id_col),
-                      F.posexplode(
-                          buckets.asNondeterministic()(F.col(vec_col)))
+                      F.posexplode(buckets(F.col(vec_col)))
                       .alias("tbl", "bucket"))
             .select(id_col, "tbl", "bucket"))
 
@@ -274,19 +271,30 @@ def ivf_topk(
 
     Scale shape: the corpus shuffles ONCE keyed by cell id; query
     fan-out is queries × n_probe ids; vectors join back by cell.
-    Recall rises with n_probe (n_probe = n_centroids ⇒ exact)."""
+    Recall rises with n_probe (n_probe = n_centroids ⇒ exact).
+
+    Raises ``ValueError`` on the driver at call time unless ``k``,
+    ``n_centroids`` and ``n_probe`` are at least 1 and ``centroids``,
+    when given, has shape (C, dim) with C, dim ≥ 1 — before any job
+    runs — or, when centroids are sampled, if the corpus is empty."""
     from pyspark.sql.window import Window
 
+    for name, v in (("k", k), ("n_centroids", n_centroids),
+                    ("n_probe", n_probe)):
+        if v < 1:
+            raise ValueError(f"ivf_topk: {name} must be >= 1, got {v}")
     if centroids is not None:
         cmat = np.asarray(centroids, dtype=np.float64)
-        assert cmat.ndim == 2 and len(cmat), "centroids must be (C, dim)"
+        if cmat.ndim != 2 or 0 in cmat.shape:
+            raise ValueError(f"ivf_topk: centroids must have shape "
+                             f"(C, dim) with C, dim >= 1, got {cmat.shape}")
         cmat = cmat / np.maximum(
             np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
         cids = np.arange(len(cmat), dtype=np.int64)
     else:
         stride = centroid_stride or max(
             1, (n_docs if n_docs is not None else df.count())
-            // n_centroids if n_centroids else 1)
+            // n_centroids)
         # deterministic hash-based sample: `id % stride` assumes dense
         # 0-based ids and selects nothing on sparse/offset id spaces;
         # hashing is position- and density-independent, needs no global
@@ -304,13 +312,14 @@ def ivf_topk(
             cent_rows = (df.orderBy(id_col).limit(n_centroids)
                          .select(F.col(id_col).alias("cid"),
                                  F.col(vec_col).alias("cvec")).collect())
-        assert cent_rows, "ivf_topk: empty corpus — no centroids"
+        if not cent_rows:
+            raise ValueError("ivf_topk: empty corpus, no centroids")
         cmat = np.array([r["cvec"] for r in cent_rows], dtype=np.float64)
         cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
         cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
 
     def _assign(n_best: int):
-        @pandas_udf("array<long>")
+        @arrow_kernel("array<long>")
         def assign(vecs: pd.Series) -> pd.Series:
             if len(vecs) == 0:
                 return pd.Series([], dtype=object)
@@ -447,7 +456,8 @@ def semantic_dedup(
         for x in cvec:  # sequential, matching list_dot_product order
             cnorm += float(x) * float(x)
         cnorm = math.sqrt(cnorm)
-        assert cnorm > 0, f"zero-norm centroid {cid}"
+        if not cnorm > 0:
+            raise ValueError(f"semantic_dedup: zero-norm centroid {cid}")
         s = F.when(F.col("_nv") > 0,
                    _dot(F.col("_v"), cvec_lit)
                    / (F.col("_nv") * F.lit(cnorm))).otherwise(F.lit(0.0))

@@ -204,3 +204,72 @@ def test_ivf_assign_all_null_batch(spark):
     got = similarity.ivf_topk(df, k=2, n_probe=2,
                               centroids=cents).collect()
     assert got and all(r["score"] == 0.0 for r in got)
+
+
+def test_hash64_sets_every_bit(spark):
+    """All 64 bit positions of the gram id and of the SimHash are live:
+    each is set at least once over random windows and random docs
+    (two packed 31-bit lanes alone leave bits 31 and 63 at 0)."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    th = rng.integers(0, 2**32, size=2000, dtype=np.int64)  # crc32 range
+    ids = dedup._hash64(th, dedup._lanes(3))
+    assert int(np.bitwise_or.reduce(ids)) == 2**64 - 1
+    words = [f"w{i}" for i in range(500)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(words, 12))) for i in range(200)],
+        "doc_id long, text string")
+    seen = 0
+    for r in docs.select(dedup.simhash64(F.col("text")).alias("h")).collect():
+        seen |= r["h"] & (2**64 - 1)
+    assert seen == 2**64 - 1
+
+
+def _jobs_run_by(spark, fn):
+    """Ids of the Spark jobs ``fn()`` starts (its own job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("param-check", "parameter check")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup("param-check")
+
+
+@pytest.mark.parametrize("kwargs, match", [
+    ({"k": 0}, "k must be >= 1"),
+    ({"n_centroids": 0}, "n_centroids must be >= 1"),
+    ({"n_probe": 0}, "n_probe must be >= 1"),
+    ({"centroids": [1.0, 0.0, 0.0, 0.0]}, r"shape \(C, dim\)"),
+    ({"centroids": [[]]}, r"shape \(C, dim\)"),
+], ids=["k", "n_centroids", "n_probe", "centroids_1d", "centroids_empty"])
+def test_ivf_topk_rejects_bad_parameter_before_any_job(spark, vecs, kwargs,
+                                                       match):
+    """Bad IVF parameters raise ValueError on the driver when the call
+    is made (an assert would vanish under ``python -O``; n_probe=0 used
+    to return no rows), before any job runs."""
+    def call():
+        with pytest.raises(ValueError, match=match):
+            similarity.ivf_topk(vecs, **kwargs)
+
+    assert not _jobs_run_by(spark, call)
+
+
+def test_ivf_topk_rejects_empty_corpus_at_call(spark):
+    """Sampling centroids from an empty corpus raises ValueError at the
+    call, not an assert."""
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="empty corpus"):
+        similarity.ivf_topk(empty, n_centroids=2, n_probe=1)
+
+
+def test_semantic_dedup_rejects_zero_norm_centroid_before_any_job(spark,
+                                                                  vecs):
+    def call():
+        with pytest.raises(ValueError, match="zero-norm centroid 1"):
+            similarity.semantic_dedup(
+                vecs, centroids=[(0, [1.0, 0.0, 0.0, 0.0]),
+                                 (1, [0.0, 0.0, 0.0, 0.0])])
+
+    assert not _jobs_run_by(spark, call)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,7 +149,8 @@ def test_jaccard_pairs_match_python_string_jaccard(spark):
         [(i, j) for i in ids for j in ids if i < j], "id_a long, id_b long")
 
     def grams(t):
-        toks = (t or "").lower().split()
+        # the JVM's ASCII \s: U+0085 and U+2028 stay inside a token
+        toks = re.findall(r"[^ \t\n\x0b\f\r]+", (t or "").lower())
         return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
 
     def jac(a, b):

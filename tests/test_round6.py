@@ -82,7 +82,9 @@ def test_gram_hash_lanes_independent():
     independently. Token-hash deltas orthogonal to both the low-lane
     coefficients and (1, 1, 1) make the low lanes of two grams equal;
     a high lane derived as 31·c + 17 from the low one then collides
-    too (a full 64-bit collision), the independent lane does not."""
+    too (a full 64-bit collision), the independent lane does not. The
+    finalizer over the packed lanes is a bijection, so it neither adds
+    nor removes a collision."""
     import numpy as np
     from log_ship_elastic_postfix_spark.operators import dedup
 
@@ -93,9 +95,9 @@ def test_gram_hash_lanes_independent():
     x = np.array([p // 2, p // 3, p // 5], dtype=np.int64)
     y = np.array([(int(v) - d) % p for v, d in zip(x, delta)],
                  dtype=np.int64)
-    low = np.uint64(0xFFFFFFFF)
+    sx, sy = (dedup._shingle_hashes(v, 3, lanes) for v in (x, y))
+    assert sx[0] == sy[0], "construction must collide the low lane"
     hx, hy = dedup._hash64(x, lanes), dedup._hash64(y, lanes)
-    assert (hx & low) == (hy & low), "construction must collide the low lane"
     assert hx != hy
     derived = np.stack([lanes[0], (lanes[0] * 31 + 17) % p])
     assert dedup._hash64(x, derived) == dedup._hash64(y, derived)
@@ -120,9 +122,16 @@ def test_shingle_strings_equal_jvm_shingles(spark):
                        for t in gram.split(" ")], dtype=np.int64)
         return int(dedup._hash64(th, lanes).astype(np.int64)[0])
 
+    # 5-8: separators Python's str.split() breaks on but the JVM's
+    # ASCII \s keeps inside a token (NBSP, U+0085, U+2028, \x1c-\x1f)
     df = spark.createDataFrame(
         [(1, "The  Quick brown fox  the quick brown"), (2, "a b"),
-         (3, "x y z w v"), (4, "")], ["doc_id", "text"])
+         (3, "x y z w v"), (4, ""),
+         (5, "alpha beta\u00a0gamma delta epsilon"),
+         (6, "alpha beta gamma\u0085delta epsilon"),
+         (7, "alpha beta\u2028gamma delta\u2029epsilon"),
+         (8, "alpha\x1cbeta gamma\x1ddelta epsilon\x1ezeta\x1feta")],
+        ["doc_id", "text"])
     rows = (df.select(
         "doc_id",
         dedup._gram_hashes64(F.col("text"), n).alias("py"),
@@ -130,7 +139,7 @@ def test_shingle_strings_equal_jvm_shingles(spark):
         .orderBy("doc_id").collect())
     for r in rows:
         assert sorted(r["py"]) == sorted({gram_id(g) for g in r["jvm"]}), r
-    assert [len(r["py"]) for r in rows] == [4, 0, 3, 0]
+    assert [len(r["py"]) for r in rows] == [4, 0, 3, 0, 2, 2, 1, 1]
 
 
 def test_gram_hashes_match_shingle_semantics(spark):
