@@ -24,7 +24,6 @@ from pyspark.sql.window import Window
 
 from log_ship_elastic_postfix_spark import datagen
 from log_ship_elastic_postfix_spark.functions import textstats
-from log_ship_elastic_postfix_spark.functions.dates import normalize_syslog_date
 from log_ship_elastic_postfix_spark.operators import dedup, route, similarity
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 from log_ship_elastic_postfix_spark.plans.pipeline import (
@@ -797,23 +796,6 @@ def q_clean_corpus(spark, sf_dir):
     reachability over the exact all-pairs jaccard set, quality mirrors
     the gopher_quality oracle."""
     from log_ship_elastic_postfix_spark.plans.corpus import (
-        CleanResult, CorpusCleanConfig, clean_corpus)
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = (d.filter(F.col("doc_id") < 30)
-               .select((F.col("doc_id") + 10000).alias("doc_id"), "text"))
-    un = d.unionByName(planted)
-    res = clean_corpus(un, CorpusCleanConfig(
-        neardup_threshold=0.5, quality_min_words=10))
-    return res.docs.select("doc_id").orderBy("doc_id")
-
-
-def q_clean_corpus_scale(spark, sf_dir):
-    """The SAME composed chain with no per-stage drop accounting
-    (collect_counts=False) — the only difference from
-    :func:`q_clean_corpus` — against the same SQL oracle: only the
-    shuffle-boundary stages checkpoint and no count actions run."""
-    from log_ship_elastic_postfix_spark.plans.corpus import (
         CorpusCleanConfig, clean_corpus)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -821,8 +803,7 @@ def q_clean_corpus_scale(spark, sf_dir):
                .select((F.col("doc_id") + 10000).alias("doc_id"), "text"))
     un = d.unionByName(planted)
     res = clean_corpus(un, CorpusCleanConfig(
-        neardup_threshold=0.5, quality_min_words=10,
-        collect_counts=False))
+        neardup_threshold=0.5, quality_min_words=10))
     return res.docs.select("doc_id").orderBy("doc_id")
 
 
@@ -1310,7 +1291,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher_quality": q_gopher_quality,
         "repetition_stats": q_repetition_stats,
         "clean_corpus": q_clean_corpus,
-        "clean_corpus_scale": q_clean_corpus_scale,
+        # the driver contract keeps its keys; oracle_sql() aliases this
+        # one to the clean_corpus oracle
+        "clean_corpus_scale": q_clean_corpus,
         "pii_redact": q_pii_redact,
         "sample_split": q_sample_split,
         "pack_sequences": q_pack_sequences,
@@ -1760,8 +1743,6 @@ def oracle_sql() -> dict[str, str]:
             "order by window_start, lang"
         ),
     }
-    # the scale-config composition computes the identical survivor set
-    # (the config changes join strategy and accounting, not semantics)
     out["clean_corpus_scale"] = out["clean_corpus"]
     # identical published regexes, same order, counts before each
     # replacement (functions/redact.py contract)

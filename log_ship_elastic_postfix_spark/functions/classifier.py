@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import WS_RUN
+
 N_BUCKETS = 16 ** 4  # 4 md5 hex chars -> 65,536 feature buckets
 _CENTER = N_BUCKETS // 2
 
@@ -50,7 +52,7 @@ _CENTER = N_BUCKETS // 2
 def tokens(text: Column) -> Column:
     """Whitespace tokens of lowercased text, empties dropped — the
     shared tokenizer rule (textstats.py / perplexity.py)."""
-    return F.filter(F.split(F.lower(F.trim(text)), r"\s+"),
+    return F.filter(F.split(F.lower(F.trim(text)), WS_RUN),
                     lambda x: x != "")
 
 

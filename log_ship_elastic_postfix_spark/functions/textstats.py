@@ -1,5 +1,5 @@
 """Text analysis functions for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+quality signals, token counting, document fingerprinting.
 
 Pure Catalyst expressions except :func:`repetition_stats`, an Arrow
 kernel — defined once here so the Spark query and any external SQL
@@ -8,10 +8,21 @@ oracle implement the *same* documented rule.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .kernel import arrow_kernel
+
+# the one whitespace class every tokenizer splits on: RE2's ``\s``, the
+# class the DuckDB oracles split on. Java's ``\s`` adds \x0b, and
+# Python's ``str.split()`` adds NBSP, U+0085, U+2028 and \x1c-\x1f;
+# here all of those stay inside a token. WS_RUN is one separator run
+# as a JVM regex, TOKEN one token as a Python regex
+WS = " \t\n\f\r"
+WS_RUN = f"[{WS}]+"
+TOKEN = re.compile(f"[^{WS}]+")
 
 # deliberately small, documented stopword list — the lang-ID heuristic
 # is "fraction of tokens that are English stopwords"
@@ -23,7 +34,7 @@ def token_count(text: Column) -> Column:
     """Whitespace token count (0 for empty/blank)."""
     t = F.trim(text)
     return F.when(t == "", F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+"))).cast("long")
+        F.size(F.split(t, WS_RUN))).cast("long")
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -32,12 +43,12 @@ def bpe_ish_token_count(text: Column) -> Column:
     estimation: every ≤4-char alnum chunk and every punctuation mark
     counts as one token)."""
     pieces = F.regexp_extract_all(
-        F.lower(text), F.lit(r"[a-z]{1,4}|\d|[^\sa-z\d]"), 0)
+        F.lower(text), F.lit(f"[a-z]{{1,4}}|\\d|[^{WS}a-z\\d]"), 0)
     return F.size(pieces).cast("long")
 
 
 def stopword_ratio(text: Column) -> Column:
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
+    toks = F.split(F.trim(F.lower(text)), WS_RUN)
     n = F.size(toks)
     sw = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
     return F.when(n > 0, sw.cast("double") / n).otherwise(F.lit(0.0))
@@ -53,23 +64,10 @@ def mean_word_length(text: Column) -> Column:
     # sum of token lengths == length of the tokens' concatenation —
     # one native array_join instead of an interpreted per-element
     # aggregate lambda (same integers, same double division)
-    toks = F.split(F.trim(text), r"\s+")
+    toks = F.split(F.trim(text), WS_RUN)
     n = F.size(toks)
     total = F.length(F.array_join(toks, ""))
     return F.when(n > 0, total.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def quality_score(text: Column) -> Column:
-    """Composite quality heuristic in [0,1]: rewards mid-length docs,
-    normal word lengths, some stopwords, low punctuation density.
-    Deterministic, documented, SQL-reproducible."""
-    n = token_count(text).cast("double")
-    len_score = F.least(n / 50.0, F.lit(1.0))
-    wl = mean_word_length(text)
-    wl_score = F.when((wl >= 3.0) & (wl <= 10.0), 1.0).otherwise(0.5)
-    sw_score = F.least(stopword_ratio(text) * 5.0, F.lit(1.0))
-    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio(text) * 5.0)
-    return F.round((len_score + wl_score + sw_score + punct_pen) / 4.0, 6)
 
 
 def lang_id(text: Column) -> Column:
@@ -82,7 +80,7 @@ def lang_id(text: Column) -> Column:
 
 def fingerprint_md5(text: Column) -> Column:
     """Stable content fingerprint (hex md5 of normalized text)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
+    return F.md5(F.trim(F.regexp_replace(F.lower(text), WS_RUN, " ")))
 
 
 def rolling_hash(text: Column, *, base: int = 31, mod: int = (1 << 31) - 1) -> Column:
@@ -145,7 +143,7 @@ def gopher_quality_flags(text: Column, *, min_words: int = 50,
 
     Pure Catalyst — at 100 TB this is a narrow projection feeding the
     keep-filter; no shuffle, no Python."""
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
+    toks = F.split(F.trim(F.lower(text)), WS_RUN)
     n = token_count(text)
     wl = mean_word_length(text)
     # literal stopword array on the LEFT: set-intersection size is
@@ -203,7 +201,7 @@ def repetition_stats(text: Column) -> Column:
             lc: Counter = Counter()
             raw_len: dict = {}
             for ln in lines:
-                k = ln.strip().lower()
+                k = ln.strip(WS).lower()
                 lc[k] += 1
                 raw_len[k] = raw_len.get(k, 0) + len(ln)
             n_lines = len(lines)
@@ -216,7 +214,7 @@ def repetition_stats(text: Column) -> Column:
                 dup_lines / n_lines if n_lines else 0.0)
             out["dup_line_char_frac"].append(
                 dup_chars / total_chars if total_chars else 0.0)
-            toks = t.lower().split()
+            toks = TOKEN.findall(t.lower())
             for n, key in ((2, "top_bigram_char_frac"),
                            (3, "top_trigram_char_frac")):
                 grams = Counter(

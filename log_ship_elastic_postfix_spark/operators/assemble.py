@@ -70,6 +70,10 @@ DOC_FIELDS = [
 ]
 DOC_SCHEMA = StructType(DOC_FIELDS)
 
+# the fold's line order within a qid. A state seed row carries -1 in
+# both (operators.state.merge_with_state), so it sorts first
+ORDER_COLS = ("batch_seq", "line_no")
+
 _HOIST_SMTP = ("delay", "delays")
 _HOIST_QMGR = ("from", "size", "nrcpt")
 _COPY_CLEANUP = ("message-id", "resent-message-id")
@@ -265,8 +269,7 @@ def _doc_to_row(doc: dict) -> dict:
     return row
 
 
-def _fold_partition_factory(order_cols: list[str], group_cols: list[str],
-                            chunk: int = 2048):
+def _fold_partition_factory(chunk: int = 2048):
     """mapInPandas fold: sort the whole shuffle partition once, then a
     single itertools.groupby pass over record dicts.
 
@@ -292,7 +295,7 @@ def _fold_partition_factory(order_cols: list[str], group_cols: list[str],
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        sort_cols = [c for c in group_cols + order_cols if c in pdf.columns]
+        sort_cols = [c for c in ("qid", *ORDER_COLS) if c in pdf.columns]
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
         # sparse row dicts (skip nulls): most parsed fields are null on
         # any given line, and fold_lines reads via .get(). Null
@@ -308,10 +311,8 @@ def _fold_partition_factory(order_cols: list[str], group_cols: list[str],
             arr = pdf[c].to_numpy(dtype=object, copy=False)
             for i in np.nonzero(pd.notna(arr))[0]:
                 all_rows[i][c] = arr[i]
-        keyf = ((lambda r: r[group_cols[0]]) if len(group_cols) == 1
-                else (lambda r: tuple(r[c] for c in group_cols)))
         out: list[dict] = []
-        for _, grp in igroupby(all_rows, key=keyf):
+        for _, grp in igroupby(all_rows, key=lambda r: r["qid"]):
             rows = list(grp)
             seed = None
             if rows and rows[0].get("_seed_json"):
@@ -329,13 +330,13 @@ def _fold_partition_factory(order_cols: list[str], group_cols: list[str],
     return fold_partition
 
 
-def assemble(parsed: DataFrame, order_cols: Optional[list[str]] = None) -> DataFrame:
-    """parsed lines → one doc per qid.
+def assemble(parsed: DataFrame) -> DataFrame:
+    """parsed lines → one doc per qid, folded in :data:`ORDER_COLS`
+    order.
 
     The repartition on qid is the pipeline's only wide dependency —
     the same single hash exchange a groupBy would plan; the fold runs
     once per shuffle partition (see _fold_partition_factory).
     """
-    order_cols = order_cols or ["batch_seq", "line_no"]
     return parsed.repartition("qid").mapInPandas(
-        _fold_partition_factory(order_cols, ["qid"]), DOC_SCHEMA)
+        _fold_partition_factory(), DOC_SCHEMA)

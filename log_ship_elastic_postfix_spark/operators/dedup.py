@@ -29,7 +29,7 @@ Physical note: every per-document computation — MinHash bands, the
 SimHash vote and the distinct gram-id sets that the Jaccard verify and
 decontamination compare — runs in ONE Arrow-batched pandas UDF,
 :func:`_shingle_kernel`. It owns the tokenizer (lowercase, split on
-the ASCII whitespace of :func:`normalize_text`), the fewer-than-n-tokens
+the whitespace class of :func:`normalize_text`), the fewer-than-n-tokens
 rule and a per-batch crc32 memo (one crc32 per *unique token per batch*
 instead of one per shingle occurrence — the measured hot spot of round
 1); each operator passes only a small numpy reducer over the token
@@ -47,7 +47,6 @@ hash mixing), never Python's salted ``hash``.
 from __future__ import annotations
 
 import logging
-import re
 import zlib
 
 import numpy as np
@@ -57,6 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.kernel import arrow_kernel
+from ..functions.textstats import TOKEN, WS_RUN
 from .similarity import _splitmix64
 
 log = logging.getLogger(__name__)
@@ -81,18 +81,10 @@ def _is_missing_path(exc: Exception) -> bool:
 DEFAULT_MAX_BUCKET = 1024
 
 
-# token separators: the ASCII class of Java's ``\s``, in regex escapes
-# Java and Python both read (RE2's ``\s``, in the DuckDB oracles, lacks
-# \x0b). Python's ``str.split()`` also splits on NBSP, U+0085, U+2028
-# and \x1c-\x1f; here they stay inside a token.
-_WS = r" \t\n\x0b\f\r"
-_TOKEN = re.compile(f"[^{_WS}]+")
-
-
 def normalize_text(text: Column) -> Column:
     """Canonical form for content comparison: lowercase, collapsed
-    ASCII whitespace, trimmed."""
-    return F.trim(F.regexp_replace(F.lower(text), f"[{_WS}]+", " "))
+    whitespace (:data:`~..functions.textstats.WS`), trimmed."""
+    return F.trim(F.regexp_replace(F.lower(text), WS_RUN, " "))
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -210,17 +202,17 @@ def _hash64(th: np.ndarray, lanes: np.ndarray) -> np.ndarray:
 
 def _shingle_kernel(n: int, out_type: str, short_value, per_doc):
     """The dedup family's one per-document kernel: lowercase
-    tokenization on :data:`_WS`, ``short_value`` for documents with
-    fewer than ``n`` tokens (NULL text included), and ``per_doc(th)``
-    over the token crc32s otherwise, memoized per Arrow batch. Returns
-    the UDF to apply to a text column."""
+    tokenization on :data:`~..functions.textstats.WS`, ``short_value``
+    for documents with fewer than ``n`` tokens (NULL text included),
+    and ``per_doc(th)`` over the token crc32s otherwise, memoized per
+    Arrow batch. Returns the UDF to apply to a text column."""
 
     @arrow_kernel(out_type)
     def kernel(texts: pd.Series) -> pd.Series:
         cache: dict = {}
         out = []
         for t in texts:
-            toks = _TOKEN.findall((t or "").lower())
+            toks = TOKEN.findall((t or "").lower())
             out.append(short_value if len(toks) < n
                        else per_doc(_token_hashes(toks, cache)))
         return pd.Series(out, dtype=object)
@@ -844,7 +836,7 @@ def vocabulary_counts(
     Ties broken by token for determinism."""
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.explode(F.split(F.lower(F.trim(F.col(text_col))), WS_RUN))
         .alias("token")).filter(F.col("token") != "")
     counts = (toks.groupBy("token")
               .agg(F.count(F.lit(1)).alias("n_occurrences"),

@@ -1,12 +1,11 @@
-"""Per-domain corpus controls: stats and document caps.
+"""Per-domain corpus control: document caps.
 
 Web pipelines bound how much any single registered domain contributes
 to the training mix (RefinedWeb / FineWeb keep at most N documents or
-tokens per domain — one mega-site must not dominate the corpus) and
-audit per-domain volume before and after. This is the domain-keyed
-analog of the reference's per-index routing counts
+tokens per domain — one mega-site must not dominate the corpus). This
+is the domain-keyed analog of the reference's per-index routing counts
 (/root/reference/lib/logship.js:330-335 — tally per elasticsearch
-index, here tally/cap per registered domain), built on
+index, here cap per registered domain), built on
 :func:`..functions.urls.url_registered_domain`.
 
 Scale design for the cap (the part a naive window gets wrong):
@@ -32,23 +31,11 @@ deterministic and an external SQL engine restates it verbatim.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.urls import url_registered_domain
-
-
-def domain_stats(df: DataFrame, *, url_col: str = "url",
-                 size_col: str | None = None) -> DataFrame:
-    """Per-registered-domain volume audit: document count (+ total
-    ``size_col`` when given). One partial-aggregated exchange keyed on
-    the domain string."""
-    dom = url_registered_domain(F.col(url_col)).alias("domain")
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if size_col is not None:
-        aggs.append(F.sum(F.col(size_col)).cast("long").alias("total_size"))
-    return df.select(dom).groupBy("domain").agg(*aggs)
 
 
 def domain_cap(

@@ -6,9 +6,6 @@ a key-value lookup join against a small external map. In Spark that is
 a broadcast hash join: the dimension ships to every executor once, the
 probe stays narrow (no shuffle of the fact side), which is the only
 join shape that survives a 10¹²-row fact table with a KB..MB dim.
-
-The graft adds the lang/host dimension joins (BASELINE.json
-north_star: "broadcast lookup joins (lang/host dimension maps)").
 """
 
 from __future__ import annotations
@@ -30,8 +27,3 @@ def with_parent(docs: DataFrame, parent_map: Optional[DataFrame]) -> DataFrame:
     return (docs.join(F.broadcast(dim), docs["qid"] == dim["_pq"], "left")
             .drop("_pq"))
 
-
-def with_dimension(df: DataFrame, dim: DataFrame, key: str,
-                   how: str = "left") -> DataFrame:
-    """Generic broadcast enrich on an equi key (lang_dim, host_dim)."""
-    return df.join(F.broadcast(dim), on=key, how=how)

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window
 
-from ..functions.textstats import token_count
+from ..functions.textstats import WS_RUN, token_count
 
 
 def shard_key(df: DataFrame, id_col: str, n_shards: int) -> Column:
@@ -121,7 +121,7 @@ def chunk_documents(df: DataFrame, *, id_col: str = "doc_id",
     assert window > 0
     stride = window if stride is None else stride
     assert 0 < stride <= window, "stride must be in (0, window]"
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
+    toks = F.filter(F.split(F.trim(F.col(text_col)), WS_RUN),
                     lambda x: x != "")
     d = df.select(F.col(id_col), toks.alias("_toks"),
                   F.size(toks).alias("_n")).filter(F.col("_n") > 0)

@@ -36,12 +36,14 @@ from typing import Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textstats import WS_RUN
+
 
 def _tokens(df: DataFrame, text_col: str, extra: Tuple[str, ...] = ()
             ) -> DataFrame:
     return (df.select(
         *extra,
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        F.explode(F.split(F.lower(F.trim(F.col(text_col))), WS_RUN))
         .alias("token"))
         .filter(F.col("token") != ""))
 

@@ -31,7 +31,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .assemble import DOC_FIELDS
+from .assemble import DOC_FIELDS, ORDER_COLS, assemble
 
 
 class StateStore:
@@ -392,30 +392,26 @@ def _layout(schema) -> list[tuple[str, str]]:
 def merge_with_state(
     parsed: DataFrame,
     state_docs: Optional[DataFrame],
-    order_cols: Optional[list[str]] = None,
 ) -> DataFrame:
     """Continuation fold: committed docs ⊔ new lines by qid.
 
     Equivalent to the reference's populatePfdocsFromEs → updatePfDocs
     sequence: a qid with a committed doc continues from it; a fresh qid
     starts from the template. Implemented as a **seed-row union**: each
-    committed doc becomes one row carrying its JSON form with
-    batch_seq/line_no = −1, unioned into the parsed-line stream, so the
+    committed doc becomes one row carrying its JSON form with every
+    ``ORDER_COLS`` column = −1, unioned into the parsed-line stream, so the
     continuation costs exactly the same single exchange as the plain
     fold (no per-key cogroup round-trips)."""
-    from .assemble import assemble
-
-    order_cols = order_cols or ["batch_seq", "line_no"]
     if state_docs is None:
-        return assemble(parsed, order_cols=order_cols)
+        return assemble(parsed)
 
     ptypes = dict(parsed.dtypes)
     doc_cols = [F.col(f"`{f.name}`") for f in DOC_FIELDS]
     seeds = state_docs.select(
         F.col("qid"),
         F.to_json(F.struct(*doc_cols)).alias("_seed_json"),
-        F.lit(-1).cast(ptypes.get("batch_seq", "bigint")).alias("batch_seq"),
-        F.lit(-1).cast(ptypes.get("line_no", "bigint")).alias("line_no"),
+        *[F.lit(-1).cast(ptypes.get(c, "bigint")).alias(c)
+          for c in ORDER_COLS],
     )
     unioned = parsed.unionByName(seeds, allowMissingColumns=True)
-    return assemble(unioned, order_cols=order_cols)
+    return assemble(unioned)

@@ -13,9 +13,10 @@ docs plus per-stage row counts (the drop-accounting every corpus paper
 reports). Scale notes: every stage reuses the operator's documented
 100 TB shape (hash-keyed exchanges, id-only candidate flows, no
 collect of doc bodies); the per-stage counts are bounded driver
-metadata (one long per stage). Stages are eagerly localCheckpoint-ed
-so a later stage never re-runs an earlier stage's shuffle and the
-count actions don't double-execute lineage.
+metadata (one long per stage). Every stage, the input included, is
+one eager localCheckpoint that observes its own row count, so a later
+stage never re-runs an earlier stage's shuffle and the counts cost no
+job of their own.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import textstats
@@ -75,14 +76,6 @@ class CorpusCleanConfig:
     classifier_threshold_micro: Optional[int] = None
     classifier_weights: Optional[DataFrame] = None
     classifier_bias_micro: int = 0
-    # per-stage drop accounting (the corpus-paper stage_counts table).
-    # True: every stage is eagerly checkpointed AND counted — one
-    # count action per stage, bounded driver metadata. False: no count
-    # actions at all; only shuffle-boundary stages checkpoint (so a
-    # later stage never re-runs an earlier shuffle) while narrow
-    # filter stages (quality, repetition) stay lazy — re-executing
-    # them is one projection over the prior checkpoint
-    collect_counts: bool = True
 
 
 @dataclass
@@ -95,20 +88,18 @@ def clean_corpus(df: DataFrame, cfg: CorpusCleanConfig) -> CleanResult:
     id_c, text_c = cfg.id_col, cfg.text_col
     counts: dict = {}
 
-    def _ckpt(frame: DataFrame, stage: str, *,
-              narrow: bool = False) -> DataFrame:
-        if cfg.collect_counts:
-            frame = frame.localCheckpoint(eager=True)
-            counts[stage] = frame.count()
-        elif not narrow:
-            # shuffle boundary: checkpoint (no count) so later stages
-            # never re-run this stage's exchange
-            frame = frame.localCheckpoint(eager=True)
+    def _ckpt(frame: DataFrame, stage: str) -> DataFrame:
+        # the checkpoint job counts the stage's rows as it builds it.
+        # The observed frame must sit at the top of the checkpointed
+        # plan only: observed under both sides of a self-join, its
+        # Observation.get fails
+        seen = Observation(stage)
+        frame = (frame.observe(seen, F.count(F.lit(1)).alias("n"))
+                 .localCheckpoint(eager=True))
+        counts[stage] = seen.get["n"]
         return frame
 
-    # input is a plain source read — checkpointing it buys nothing
-    # beyond the count, so it is "narrow" for accounting purposes
-    cur = _ckpt(df, "input", narrow=True)
+    cur = _ckpt(df, "input")
 
     if cfg.url_col:
         kept = dedup_by_canonical_url(cur, url_col=cfg.url_col)
@@ -174,13 +165,13 @@ def clean_corpus(df: DataFrame, cfg: CorpusCleanConfig) -> CleanResult:
     if cfg.quality_min_words is not None:
         flags = textstats.gopher_quality_flags(
             F.col(text_c), min_words=cfg.quality_min_words)
-        cur = _ckpt(cur.filter(flags["passes"]), "quality", narrow=True)
+        cur = _ckpt(cur.filter(flags["passes"]), "quality")
 
     if cfg.repetition_max_frac is not None:
         rep = textstats.repetition_stats(F.col(text_c))
         keep = ((rep["top_bigram_char_frac"] <= cfg.repetition_max_frac)
                 & (rep["dup_line_char_frac"] <= cfg.repetition_max_frac))
-        cur = _ckpt(cur.filter(keep), "repetition", narrow=True)
+        cur = _ckpt(cur.filter(keep), "repetition")
 
     if cfg.classifier_threshold_micro is not None:
         from ..functions import classifier as clf
@@ -193,7 +184,7 @@ def clean_corpus(df: DataFrame, cfg: CorpusCleanConfig) -> CleanResult:
                 + F.lit(int(cfg.classifier_bias_micro)).cast("long"))
             keep = (score >= F.lit(int(cfg.classifier_threshold_micro))
                     .cast("long") * F.size(toks).cast("long"))
-            cur = _ckpt(cur.filter(keep), "classifier", narrow=True)
+            cur = _ckpt(cur.filter(keep), "classifier")
         else:
             scored = clf.classifier_score(
                 cur, text_col=text_c, id_col=id_c,

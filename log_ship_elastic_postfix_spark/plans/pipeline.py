@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import datetime as dt
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 _log = logging.getLogger(__name__)
@@ -26,10 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import enrich, route
+from ..operators.assemble import ORDER_COLS
 from ..operators.parse import ParseResult, is_reject, parse_lines
 from ..operators.state import StateStore, merge_with_state
 from ..sources.bookmark import BookmarkStore
-from ..sources.pages import pages_to_lines, read_pages, with_batch_seq
+from ..sources.pages import pages_to_lines, with_batch_seq
 
 # deterministic clock for year inference in tests/bench; production
 # passes datetime.now()
@@ -45,7 +46,6 @@ class PipelineConfig:
     n_batches: int = 1
     orphan_sink: str = route.ORPHAN_SINK
     parent_sink: str = route.PARENT_SINK
-    order_cols: tuple[str, ...] = ("batch_seq", "line_no")
     # S7 typed sink (index-map-template projection) on the terminal
     # write; False writes the all-string in-flight shape (the r1
     # behavior) — bench times both so the typed feature's cost is
@@ -71,7 +71,7 @@ LINE_BYTES = "_line_bytes"
 def parse_stage(lines: DataFrame, cfg: PipelineConfig) -> ParseResult:
     # only the order keys ride through the parse UDF — url/lang/text
     # passengers would be Arrow-serialized both ways for nothing
-    passengers = [c for c in (*cfg.order_cols, LINE_BYTES)
+    passengers = [c for c in (*ORDER_COLS, LINE_BYTES)
                   if c in lines.columns]
     return parse_lines(lines, tz=cfg.tz, now=cfg.now,
                        passengers=passengers)
@@ -84,12 +84,11 @@ def assemble_stage(parsed: DataFrame, cfg: PipelineConfig,
     # text/html passenger columns (at 100 TB the difference is the
     # whole shuffle volume)
     from ..operators.parse import PARSED_FIELDS
-    keep = [c for c in ("qid", "host", "prog", "date", *cfg.order_cols)
+    keep = [c for c in ("qid", "host", "prog", "date", *ORDER_COLS)
             if c in parsed.columns]
     keep += [f for f in PARSED_FIELDS if f in parsed.columns and f != "qid"]
     parsed = parsed.select(*[F.col(f"`{c}`") for c in keep])
-    return merge_with_state(parsed, state_docs,
-                            order_cols=list(cfg.order_cols))
+    return merge_with_state(parsed, state_docs)
 
 
 def run_batch(
@@ -103,7 +102,6 @@ def run_batch(
     sink_path: Optional[str] = None,
     rejects_path: Optional[str] = None,
     bookmark: Optional[BookmarkStore] = None,
-    collect_lineage: bool = True,
 ) -> BatchResult:
     """One micro-batch through the full pipeline.
 
@@ -115,8 +113,7 @@ def run_batch(
     if "batch_seq" not in lines.columns:
         lines = lines.withColumn("batch_seq", F.lit(batch_seq))
 
-    lineage = bookmark is not None and collect_lineage
-    if lineage:
+    if bookmark is not None:
         lines = lines.withColumn(LINE_BYTES, F.length("line"))
     pr = parse_stage(lines, cfg)
     rejects = pr.rejects.drop(LINE_BYTES)
@@ -138,9 +135,9 @@ def run_batch(
         # one aggregate over the persisted grok output answers the
         # parsed lines' distinct dates (state pruning, needed before
         # the fold) and the manifest's counts and lineage, grouped by
-        # input partition when lineage is on (the parse is narrow, so
-        # its partitions are the input's). The dates ride as structs so
-        # a NULL date is kept like distinct() keeps it.
+        # input partition (the parse is narrow, so its partitions are
+        # the input's). The dates ride as structs so a NULL date is
+        # kept like distinct() keeps it.
         kept = ~is_reject()
         aggs = []
         if state is not None:
@@ -148,9 +145,8 @@ def run_batch(
                 F.substring("date", 1, 10).alias("d")))).alias("dates"))
         if bookmark is not None:
             aggs += [F.count(F.lit(1)).alias("rows"),
-                     F.count_if(~kept).alias("rejects")]
-        if lineage:
-            aggs.append(F.sum(LINE_BYTES).alias("bytes"))
+                     F.count_if(~kept).alias("rejects"),
+                     F.sum(LINE_BYTES).alias("bytes")]
             meta = (pr.all_rows.groupBy(
                 F.spark_partition_id().alias("partition_id"))
                 .agg(*aggs).collect())
@@ -191,8 +187,7 @@ def run_batch(
                 "lineage": [{"partition_id": r["partition_id"],
                              "rows": r["rows"], "bytes": r["bytes"]}
                             for r in sorted(
-                                meta, key=lambda r: r["partition_id"])]
-                if lineage else [],
+                                meta, key=lambda r: r["partition_id"])],
                 "n_lines": sum(r["rows"] for r in meta),
                 "n_rejects": sum(r["rejects"] for r in meta),
             }

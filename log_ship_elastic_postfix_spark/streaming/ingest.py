@@ -48,7 +48,7 @@ import os
 from typing import Optional
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (_is_missing_path, incremental_exact_dedup,
@@ -98,10 +98,14 @@ class DedupIngest:
         # checkpoint BEFORE deriving the corpus frame: both writes must
         # consume the single evaluated survivor set (ADVICE r5 — the
         # pre-checkpoint plan would recompute the whole dedup lineage,
-        # including a second hash-store scan, for the corpus write)
-        survivors = survivors.localCheckpoint(eager=True)
+        # including a second hash-store scan, for the corpus write).
+        # The checkpoint job also counts the survivors; an Observation
+        # fires once, so each batch makes its own
+        kept = Observation("ingest_kept")
+        survivors = (survivors.observe(kept, F.count(F.lit(1)).alias("n"))
+                     .localCheckpoint(eager=True))
         docs = batch_df.join(survivors.select(self.id_col), self.id_col)
-        n_kept = survivors.count()
+        n_kept = kept.get["n"]
         (docs.write.mode("overwrite")
          .parquet(os.path.join(self.corpus_path,
                                f"ingest_batch={batch_id}")))

@@ -3,17 +3,17 @@
 
     python scripts/clean_corpus.py --input /path/docs.parquet \
         --output /path/clean --min-docs-line 2 --neardup 0.7 \
-        --quality-min-words 50 [--url-col url] [--no-counts]
+        --quality-min-words 50 [--url-col url]
 
 Reads a documents table (id + text [+ url] columns), runs the
 clean_corpus chain (url dedup → line dedup → exact dedup → MinHash
 near-dup CC → Gopher quality → repetition gate, each stage optional),
 writes the survivors as parquet, and prints ONE JSON line with the
-per-stage drop accounting — the corpus-paper stage_counts table.
+per-stage drop accounting — the corpus-paper stage_counts table, which
+each stage's checkpoint job counts as it runs (no extra jobs).
 
 Star connected components, AQE on; the planner picks the verify
-joins. ``--no-counts`` (collect_counts=False) drops the per-stage
-count actions for pure-throughput runs. ``--shards-out DIR`` finishes
+joins. ``--shards-out DIR`` finishes
 the job as a trainer handoff: the survivors are also written as a
 training-shard drop (operators.shards layout + per-shard manifest).
 """
@@ -49,7 +49,6 @@ def main() -> None:
     p.add_argument("--quality-min-words", type=int, default=50,
                    help="<=0 disables the Gopher quality gate")
     p.add_argument("--repetition-max", type=float, default=None)
-    p.add_argument("--no-counts", action="store_true")
     p.add_argument("--shards-out", default=None,
                    help="also write the survivors as a training-shard "
                         "drop (operators.shards layout + manifest)")
@@ -75,8 +74,7 @@ def main() -> None:
         minhash_k=args.minhash_k, minhash_bands=args.minhash_bands,
         quality_min_words=(args.quality_min_words
                            if args.quality_min_words > 0 else None),
-        repetition_max_frac=args.repetition_max,
-        collect_counts=not args.no_counts)
+        repetition_max_frac=args.repetition_max)
 
     t0 = time.monotonic()
     res = clean_corpus(docs, cfg)

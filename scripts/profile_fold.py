@@ -49,7 +49,7 @@ def main():
     n_urls = int(os.environ.get("PROFILE_URLS", "30000"))
     pdf = stage_parsed(n_urls)
     print(f"parsed lines: {len(pdf)}", file=sys.stderr)
-    fold = _fold_partition_factory(["batch_seq", "line_no"], ["qid"])
+    fold = _fold_partition_factory()
 
     def run():
         n_docs = 0

@@ -189,7 +189,7 @@ def test_manifest_counts_match_counts(spark, small_pages, tmp_path):
     assert "no_qid" in reasons and len(reasons) > 1
 
     bm = BookmarkStore(str(tmp_path / "bm"))
-    run_batch(spark, lines, CFG, bookmark=bm, collect_lineage=False)
+    run_batch(spark, lines, CFG, bookmark=bm)
     m = bm.read_manifest(0)
     assert m["n_lines"] == pr.all_rows.count() == lines.count()
     assert m["n_rejects"] == pr.rejects.count() == sum(

@@ -261,8 +261,7 @@ def test_clean_corpus_composed_plan_no_cartesian(spark, docs_df,
 
     monkeypatch.setattr(_classic.DataFrame, "localCheckpoint", spy)
     res = clean_corpus(docs_df, CorpusCleanConfig(
-        neardup_threshold=0.5, quality_min_words=2,
-        collect_counts=False))
+        neardup_threshold=0.5, quality_min_words=2))
     monkeypatch.undo()
     plans.append(_plan(res.docs))
     assert len(plans) >= 4, "spy must capture the stage checkpoints"

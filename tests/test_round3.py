@@ -149,8 +149,8 @@ def test_jaccard_pairs_match_python_string_jaccard(spark):
         [(i, j) for i in ids for j in ids if i < j], "id_a long, id_b long")
 
     def grams(t):
-        # the JVM's ASCII \s: U+0085 and U+2028 stay inside a token
-        toks = re.findall(r"[^ \t\n\x0b\f\r]+", (t or "").lower())
+        # RE2's \s (textstats.WS): U+0085 and U+2028 stay inside a token
+        toks = re.findall(r"[^ \t\n\f\r]+", (t or "").lower())
         return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
 
     def jac(a, b):

@@ -192,9 +192,10 @@ def test_clean_corpus_scale_config_planted_counts(spark):
     }
 
 
-def test_clean_corpus_collect_counts_off(spark, monkeypatch):
-    """collect_counts=False: zero count() actions, empty stage_counts,
-    and the SAME survivor set as the accounting mode."""
+def test_clean_corpus_counts_ride_on_checkpoints(spark, monkeypatch):
+    """Every stage count comes from its checkpoint job: the chain runs
+    one DataFrame.count (the LSH bucket-cap accounting inside the
+    near-dup operator) and still reports all four stage counts."""
     from log_ship_elastic_postfix_spark.plans.corpus import (
         CorpusCleanConfig, clean_corpus)
 
@@ -205,8 +206,6 @@ def test_clean_corpus_collect_counts_off(spark, monkeypatch):
     # patch the CONCRETE class (pyspark.sql.classic.…DataFrame in
     # Spark 4 overrides count; patching the abstract base is a no-op)
     DF = type(docs)
-    cfg = dict(neardup_threshold=0.5, quality_min_words=10)
-
     n_counts = 0
     orig_count = DF.count
 
@@ -216,25 +215,48 @@ def test_clean_corpus_collect_counts_off(spark, monkeypatch):
         return orig_count(self)
 
     monkeypatch.setattr(DF, "count", track_count)
-    with_counts = clean_corpus(docs, CorpusCleanConfig(**cfg))
-    n_on = n_counts
-    assert set(with_counts.stage_counts) == {
-        "input", "exact_dedup", "neardup", "quality"}
-
-    n_counts = 0
     res = clean_corpus(docs, CorpusCleanConfig(
-        collect_counts=False, **cfg))
-    n_off = n_counts
+        neardup_threshold=0.5, quality_min_words=10))
     monkeypatch.undo()
 
-    assert res.stage_counts == {}
-    # exactly the per-stage accounting counts are skipped (the one
-    # remaining count() is the LSH bucket-drop accounting, which is
-    # operator-internal and unconditional)
-    assert n_off == n_on - len(with_counts.stage_counts)
+    assert n_counts == 1
+    # 25 distinct texts; all of them differ in one trailing number, so
+    # near-dup clustering leaves one
+    assert res.stage_counts == {
+        "input": 50, "exact_dedup": 25, "neardup": 1, "quality": 1}
+    assert res.docs.count() == 1
 
-    assert (sorted(r["doc_id"] for r in res.docs.collect())
-            == sorted(r["doc_id"] for r in with_counts.docs.collect()))
+
+@pytest.mark.timeout(300)
+def test_clean_corpus_stage_that_empties_counts_zero(spark):
+    """A stage that drops every row reports 0, and so do the stages
+    after it: an observation over an empty checkpoint still fires."""
+    from log_ship_elastic_postfix_spark.plans.corpus import (
+        CorpusCleanConfig, clean_corpus)
+
+    docs = spark.createDataFrame(
+        [(i, "short doc number %d" % i) for i in range(20)],
+        "doc_id long, text string")
+    res = clean_corpus(docs, CorpusCleanConfig(
+        quality_min_words=50, repetition_max_frac=0.5))
+    assert res.stage_counts == {
+        "input": 20, "exact_dedup": 20, "neardup": 20, "quality": 0,
+        "repetition": 0}
+    assert res.docs.count() == 0
+
+
+@pytest.mark.timeout(300)
+def test_clean_corpus_empty_input_counts_zero(spark):
+    """An empty input reports 0 at every stage instead of waiting for
+    an observation no job fills."""
+    from log_ship_elastic_postfix_spark.plans.corpus import (
+        CorpusCleanConfig, clean_corpus)
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    res = clean_corpus(docs, CorpusCleanConfig(
+        neardup_threshold=0.5, quality_min_words=10))
+    assert res.stage_counts == {
+        "input": 0, "exact_dedup": 0, "neardup": 0, "quality": 0}
 
 
 # ------------------------------------- benchmark decontamination

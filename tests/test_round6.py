@@ -122,8 +122,9 @@ def test_shingle_strings_equal_jvm_shingles(spark):
                        for t in gram.split(" ")], dtype=np.int64)
         return int(dedup._hash64(th, lanes).astype(np.int64)[0])
 
-    # 5-8: separators Python's str.split() breaks on but the JVM's
-    # ASCII \s keeps inside a token (NBSP, U+0085, U+2028, \x1c-\x1f)
+    # 5-8: separators Python's str.split() breaks on but the tokenizer
+    # (textstats.WS) keeps inside a token (NBSP, U+0085, U+2028,
+    # \x1c-\x1f)
     df = spark.createDataFrame(
         [(1, "The  Quick brown fox  the quick brown"), (2, "a b"),
          (3, "x y z w v"), (4, ""),
