@@ -27,7 +27,7 @@ from log_ship_elastic_postfix_spark.functions import textstats
 from log_ship_elastic_postfix_spark.operators import dedup, route, similarity
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 from log_ship_elastic_postfix_spark.plans.pipeline import (
-    DEFAULT_NOW, PipelineConfig, run_batch)
+    PipelineConfig, run_batch)
 from log_ship_elastic_postfix_spark.sources.pages import (
     pages_to_lines, with_batch_seq)
 
@@ -488,10 +488,10 @@ def q_simhash_neardup(spark, sf_dir):
     comparable). EXPLICIT corpus cap at doc_id<1000 (covers the whole
     sf0.01 correctness corpus): recall 1.0 for jaccard-0.5 pairs needs
     8-bit slices whose random-collision candidate count grows n²/256 —
-    a verification-primitive demo, like token_jaccard_pairs. The
-    unbounded-scale simhash path is the hamming≤n_tables−1 variant
-    (pigeonhole guarantee, wide slices), pytest-covered in
-    tests/test_dedup_similarity.py."""
+    a verification-primitive demo, like token_jaccard_pairs. This is
+    the library's one SimHash near-dup path: every candidate is
+    verified by exact Jaccard, so precision is exact and the oracle
+    equality proves recall 1.0."""
     # parallelize=False: the query keeps only 1000 docs — the blanket
     # repartition would shuffle the whole table just to discard it;
     # the pushed-down doc_id filter on the raw scan is cheaper, and
@@ -586,16 +586,15 @@ def q_ann_topk_ivf(spark, sf_dir):
     adversarially near-uniform (max pairwise cosine ≈0.51), so the
     recall-1.0 demo probes all 16 cells; on clustered real embeddings
     the same operator runs n_probe ≪ n_centroids
-    (tests/test_dedup_similarity.py pins recall↑ with n_probe)."""
+    (tests/test_dedup_similarity.py pins recall↑ with n_probe).
+    ``n_docs=1024`` sizes the centroid sample (stride 1024 // 16 = 64)
+    without the sizing ``count()`` job; any stride is recall-neutral
+    here because n_probe == n_centroids probes every cell."""
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     qs = e.filter(F.col("vec_id") < 50)
-    # explicit stride: skips the sizing df.count() job entirely (at
-    # production scale the row count is catalog metadata; any stride
-    # is recall-neutral here because n_probe == n_centroids probes
-    # every cell)
     return similarity.ivf_topk(e, k=5, n_centroids=16, n_probe=16,
-                               queries=qs, centroid_stride=64)
+                               queries=qs, n_docs=1024)
 
 
 def q_typed_sink_projection(spark, sf_dir):

@@ -3,9 +3,9 @@
 per-query isolation bench the optimization guide §1.4 prescribes).
 
 Times individual declared queries with the noop sink against
-$SPARK_GRAFT_SF_DIR (default sf1.0 — the driver's round-5 measurement
-scale), optionally repeats, and can dump .explain("formatted") plans
-to plans/r06/. Uses the same session shape as bench.py.
+$SPARK_GRAFT_SF_DIR (default sf0.1, as in bench.py), optionally
+repeats, and can dump .explain("formatted") plans to plans/r06/. Uses
+the same session shape as bench.py.
 
 Usage:
   python bench_extra.py q1 q2 ...          # time queries (noop sink)
@@ -48,7 +48,7 @@ def main() -> None:
         else:
             names.append(a); i += 1
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = build_spark(cpus, shuffle_partitions=max(cpus, 8),
                         python_heavy=True)

@@ -12,7 +12,8 @@ standard corpus-dedup toolbox; each operator here is expressible at
   not materialize as one row) and are verified by exact Jaccard.
 - SimHash: 64-bit weighted-projection fingerprint; near-dups collide
   on bit-slice keys (pigeonhole: hamming ≤ n_tables−1 pairs are
-  guaranteed to share ≥1 slice), then exact-verified.
+  guaranteed to share ≥1 slice), then exact-Jaccard-verified like the
+  MinHash candidates.
 - n-gram Jaccard: exact verification primitive over distinct gram-id
   sets (used standalone for small candidate sets and as the LSH
   verifier).
@@ -490,39 +491,6 @@ def simhash_candidates(
     return bucket_join_pairs(exploded, ["tbl", "bkey"], id_col,
                              max_bucket_size=max_bucket_size,
                              label="simhash-lsh")
-
-
-def simhash_near_duplicates(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, n_shingle: int = 2, n_tables: int = 8,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """SimHash near-dup pairs verified by exact hamming distance.
-
-    Pairs with hamming ≤ n_tables−1 are found with recall 1.0
-    (pigeonhole); beyond that, recall decays with distance."""
-    cand = simhash_candidates(
-        df, text_col=text_col, id_col=id_col, n_shingle=n_shingle,
-        n_tables=n_tables, max_bucket_size=max_bucket_size)
-    # persisted: both join sides below otherwise recompute the simhash
-    # UDF (the verify stage's whole cost, twice); released via an eager
-    # checkpoint of the verified pairs — same no-leak contract as
-    # jaccard_pairs (hamming pairs are three longs per row)
-    sh = df.select(F.col(id_col),
-                   simhash64(F.col(text_col), n_shingle).alias("simhash")) \
-        .persist()
-    try:
-        a = sh.select(F.col(id_col).alias("id_a"),
-                      F.col("simhash").alias("sh_a"))
-        b = sh.select(F.col(id_col).alias("id_b"),
-                      F.col("simhash").alias("sh_b"))
-        ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        verified = (cand.join(a, "id_a").join(b, "id_b")
-                    .select("id_a", "id_b", ham.alias("hamming"))
-                    .filter(F.col("hamming") <= max_hamming))
-        return verified.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
 
 
 def _bidir(edges: DataFrame) -> DataFrame:

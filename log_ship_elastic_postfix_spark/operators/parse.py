@@ -13,15 +13,14 @@ Mirrors the reference's read→parse path
 
 Physical design: **one Arrow-vectorized mapInArrow pass** (RE2
 kernels from ``pyarrow.compute``, each pattern applied once per
-batch). The earlier pure-Catalyst formulation (functions/grammar.py)
-was measured ~20× slower because CollapseProject inlines the envelope
-regex into every downstream field expression — ~30 executions of the
-same pattern per line; Catalyst has no common-subexpression reuse
-across projection fields. The stage stays narrow (no shuffle), and
-column pruning still reaches the scan (only the line column and
-passengers are read). The pandas ``str.extract`` form of the same
-grammar lives in ``tests/grok_reference.py`` as the differential
-oracle.
+batch). The pure-Catalyst formulation was measured ~20× slower
+because CollapseProject inlines the envelope regex into every
+downstream field expression — ~30 executions of the same pattern per
+line; Catalyst has no common-subexpression reuse across projection
+fields. The stage stays narrow (no shuffle), and column pruning still
+reaches the scan (only the line column and passengers are read). The
+Catalyst and pandas ``str.extract`` forms of the same grammar live in
+``tests/grok_reference.py`` as the differential oracles.
 """
 
 from __future__ import annotations
@@ -36,7 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions.grammar import PROG_FILTER_RE
+# stage-2 pre-filter before the grammar extraction (reference:
+# lib/postfix-doc.js:20)
+PROG_FILTER_RE = r"^(postfix|rspamd|rmilter)"
 
 # flat parsed-line columns, FIXTURES.md §2 (all strings in flight —
 # the reference keeps size/nrcpt as strings, test/logship.js:26-27;
@@ -166,8 +167,9 @@ _ENV_ARROW = (
     r"(?P<host>\S+)\s+(?P<prog>[A-Za-z0-9._/-]+)\[(?P<pid>\d+)\]:\s+"
     r"(?P<msg>.*)$")
 _QID_REST_ARROW = r"^(?P<qid0>[0-9A-Za-z]+):\s(?P<rest>.*)$"
-# mirrors QID_RE: digit-bearing alnum OR uppercase-hex >=6 (NOQUEUE /
-# warning-style all-caps words must NOT validate — see grammar.py)
+# mirrors the reference QID_RE: digit-bearing alnum OR uppercase-hex
+# >=6 (NOQUEUE / warning-style all-caps words must NOT validate — see
+# tests/grok_reference.py)
 _QID_VALID_ARROW = r"^(?:[0-9A-Za-z]*\d[0-9A-Za-z]*|[0-9A-F]{6,})$"
 
 
@@ -329,7 +331,6 @@ def parse_lines(
     line_col: str = "line",
     tz: str = "America/Phoenix",
     now: Optional[dt.datetime] = None,
-    require_qid: bool = True,
     passengers: Optional[list[str]] = None,
     fields: Optional[list[str]] = None,
 ) -> ParseResult:
@@ -338,16 +339,13 @@ def parse_lines(
     ``lines`` must carry ``line_col`` plus any passenger columns
     (``line_no``, ``batch_seq``, ``url`` …); ``passengers`` selects
     which of them survive the parse (see :func:`parse_all`).
-    ``require_qid=False`` reproduces the test/replay entry point
-    (readLogLine, lib/logship.js:163-167) which enqueues qid-less
-    parsed lines.
     """
     all_rows = parse_all(lines, line_col=line_col, tz=tz, now=now,
                          passengers=passengers, fields=fields)
     out_passengers = [c for c in all_rows.columns
                       if c in lines.columns and c != line_col]
 
-    reject = is_reject(require_qid)
+    reject = is_reject()
     parsed = all_rows.filter(~reject).drop("reject_reason")
     # a grok reject keeps its reason; the only other reject is qid-less
     rejects = all_rows.filter(reject).select(
@@ -358,14 +356,12 @@ def parse_lines(
     return ParseResult(parsed=parsed, rejects=rejects, all_rows=all_rows)
 
 
-def is_reject(require_qid: bool = True) -> Column:
+def is_reject() -> Column:
     """The reject rule over :func:`parse_all` output: a grok reject
-    (``reject_reason`` set) or, with ``require_qid``, a line with no
-    queue id. :func:`parse_lines` splits parsed/rejects on it and the
-    pipeline counts rejects with it, so the rule lives here once.
-    Never NULL, so ``~is_reject()`` is exactly the kept rows."""
+    (``reject_reason`` set) or a line with no queue id. :func:`parse_lines`
+    splits parsed/rejects on it and the pipeline counts rejects with
+    it, so the rule lives here once. Never NULL, so ``~is_reject()`` is
+    exactly the kept rows."""
     grok_reject = F.col("reject_reason").isNotNull()
-    if not require_qid:
-        return grok_reject
     qid_ok = F.col("qid").isNotNull() & (F.col("qid") != "")
     return grok_reject | ~qid_ok

@@ -15,14 +15,23 @@ lists (lib/logship.js:263-279).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.dates import date_suffix
 
 ORPHAN_SINK = "postfix-orphan"
 PARENT_SINK = "postfix-parent"
 REJECT_SINK = "rejects"
+
+
+def date_suffix(iso_date: Column) -> Column:
+    """ISO doc date → 'YYYY-MM-DD' routing suffix.
+
+    Reference: per-day index names ``postfix-orphan-YYYY-MM-DD``
+    (lib/logship.js:143-161). The ISO string is already
+    zero-padded, so this is a zero-cost substring — no timestamp parse,
+    no session-timezone sensitivity.
+    """
+    return F.substring(iso_date, 1, 10)
 
 
 def route_docs(

@@ -1,21 +1,24 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, as a training-data pipeline needs both:
+Three top-k operators share one exact re-rank (:func:`_top_k`: cosine
+via an Arrow batch kernel, rounded to 6 places, window ``row_number``
+by score then neighbour id); they differ only in how candidate pairs
+are generated:
 
-- brute-force cosine top-k — the correctness baseline. Dot products via
-  ``F.zip_with`` + ``F.aggregate`` (JVM, codegen); top-k via window
-  ``row_number`` over a partition-pruned candidate join.
-- LSH-bucketed ANN (random-hyperplane signs) — the scale path: each
+- brute-force (:func:`brute_force_topk`) — every pair; the exact
+  member of the family, against which the others' recall is checked.
+- LSH-bucketed ANN (:func:`ann_topk`, random-hyperplane signs) — each
   vector lands in ``n_tables`` sign-buckets; candidate pairs only join
   within buckets, so the exchange is on bucket keys, never O(n²).
   Hyperplanes are deterministic (seeded arithmetic), not RNG state.
+- IVF (:func:`ivf_topk`) — each query probes its nearest centroid
+  cells.
 
 Shuffle discipline (the 100 TB rule): candidate generation and
 dedup run over **ids only** — the (tbl, bucket) join and the
 ``distinct`` exchange carry two longs per row; embedding vectors
-(dim × 8 bytes) are joined back exactly once per surviving pair side.
-Round 1 carried both vectors through the dedup shuffle — at dim=1024
-that is a 256× larger exchange for identical output.
+(dim × 8 bytes) are joined back exactly once per surviving pair side
+(:func:`_scored`).
 """
 
 from __future__ import annotations
@@ -87,32 +90,51 @@ def _cosine_batch(a: Column, b: Column) -> Column:
     return cos(a, b)
 
 
+def _scored(pairs: DataFrame, df: DataFrame, left: str, right: str, *,
+            id_col: str, vec_col: str) -> DataFrame:
+    """Id pairs → ``(left, right, score)``: each side's vector joins
+    back by id (as ``vec_a``/``vec_b``, the names the plan gates know)
+    and ``score`` is their cosine rounded to 6 places."""
+    va = df.select(F.col(id_col).alias(left), F.col(vec_col).alias("vec_a"))
+    vb = df.select(F.col(id_col).alias(right), F.col(vec_col).alias("vec_b"))
+    return (pairs.join(va, left).join(vb, right)
+            .select(left, right, F.round(
+                _cosine_batch(F.col("vec_a"), F.col("vec_b")), 6)
+                .alias("score")))
+
+
+def _top_k(pairs: DataFrame, df: DataFrame, k: int, *, id_col: str,
+           vec_col: str) -> DataFrame:
+    """Candidate ``(query_id, nbr_id)`` pairs → the ``k`` best-scored
+    neighbours per query, ``(query_id, nbr_id, score, rank)``; ties
+    rank by ascending ``nbr_id``, so the output is deterministic."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("nbr_id").asc())
+    return (_scored(pairs, df, "query_id", "nbr_id", id_col=id_col,
+                    vec_col=vec_col)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def brute_force_topk(
     df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 5, queries: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k neighbors for every query vector.
+    """Exact cosine top-k neighbors for every query vector: every
+    (query, corpus) pair is a candidate.
 
-    ``queries`` defaults to the corpus itself (self-join, excluding
-    self-matches). Ties break on neighbor id — deterministic output.
-    At scale the corpus side would be bucketed/broadcast in chunks;
-    this operator is the oracle the ANN path is verified against.
+    ``queries`` (rows of ``df``; only their ids are read) defaults to
+    the corpus itself (self-join, excluding self-matches). Ties break
+    on neighbor id — deterministic output. This operator is the exact
+    member of the top-k family, the recall baseline for the ANN and
+    IVF paths.
     """
-    from pyspark.sql.window import Window
-
-    corpus = df.select(F.col(id_col).alias("nbr_id"),
-                       F.col(vec_col).alias("nbr_vec"))
-    qs = (queries or df).select(F.col(id_col).alias("query_id"),
-                                F.col(vec_col).alias("query_vec"))
-    scored = (qs.crossJoin(corpus)
-              .filter(F.col("query_id") != F.col("nbr_id"))
-              .withColumn("score", F.round(
-                  _cosine_batch(F.col("query_vec"), F.col("nbr_vec")), 6)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", "score", "rank"))
+    qids = (queries or df).select(F.col(id_col).alias("query_id"))
+    pairs = (qids.crossJoin(df.select(F.col(id_col).alias("nbr_id")))
+             .filter(F.col("query_id") != F.col("nbr_id")))
+    return _top_k(pairs, df, k, id_col=id_col, vec_col=vec_col)
 
 
 _M64 = (1 << 64) - 1
@@ -230,31 +252,18 @@ def ann_topk(
     + window rank within the candidate set. Recall rises with
     ``n_tables``; the join key is (tbl, bucket) so the shuffle volume
     is corpus × n_tables ids, not corpus² vectors."""
-    from pyspark.sql.window import Window
-
     pairs = _candidate_id_pairs(
         df, id_col=id_col, vec_col=vec_col, dim=dim,
         n_tables=n_tables, n_bits=n_bits, symmetric=False, queries=queries)
-    qv = df.select(F.col(id_col).alias("id_a"),
-                   F.col(vec_col).alias("query_vec"))
-    nv = df.select(F.col(id_col).alias("id_b"),
-                   F.col(vec_col).alias("nbr_vec"))
-    scored = (pairs.join(qv, "id_a").join(nv, "id_b")
-              .withColumn("score", F.round(
-                  _cosine_batch(F.col("query_vec"), F.col("nbr_vec")), 6)))
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("score").desc(), F.col("id_b").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("id_a").alias("query_id"),
-                    F.col("id_b").alias("nbr_id"), "score", "rank"))
+    return _top_k(pairs.toDF("query_id", "nbr_id"), df, k, id_col=id_col,
+                  vec_col=vec_col)
 
 
 def ivf_topk(
     df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 5, n_centroids: int = 16, n_probe: int = 4,
-    queries: DataFrame | None = None, centroid_stride: int | None = None,
-    centroids=None, n_docs: int | None = None,
+    queries: DataFrame | None = None, centroids=None,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: corpus vectors are
     bucketed by nearest centroid; each query scans only its ``n_probe``
@@ -265,20 +274,21 @@ def ivf_topk(
     owns centroid quality, this operator owns the distributed
     probe/re-rank; cell ids are then 0..C−1. Without it, centroids are
     deterministic corpus samples (hash-picked, L2-normalized) — no
-    RNG, no k-means iterations. ``n_docs``/``centroid_stride`` let the
-    caller size the sample without the extra df.count() job (a known
-    table row count is catalog metadata at production scale).
+    RNG, no k-means iterations. ``n_docs`` lets the caller size the
+    sample (stride ``n_docs // n_centroids``) without the extra
+    df.count() job (a known table row count is catalog metadata at
+    production scale).
 
     Scale shape: the corpus shuffles ONCE keyed by cell id; query
-    fan-out is queries × n_probe ids; vectors join back by cell.
-    Recall rises with n_probe (n_probe = n_centroids ⇒ exact).
+    fan-out is queries × n_probe ids; the re-rank joins vectors back
+    from ``df`` by id. Recall rises with n_probe (n_probe = n_centroids
+    ⇒ exact). ``queries`` are rows of ``df``; their vectors pick the
+    probed cells.
 
     Raises ``ValueError`` on the driver at call time unless ``k``,
     ``n_centroids`` and ``n_probe`` are at least 1 and ``centroids``,
     when given, has shape (C, dim) with C, dim ≥ 1 — before any job
     runs — or, when centroids are sampled, if the corpus is empty."""
-    from pyspark.sql.window import Window
-
     for name, v in (("k", k), ("n_centroids", n_centroids),
                     ("n_probe", n_probe)):
         if v < 1:
@@ -292,9 +302,8 @@ def ivf_topk(
             np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
         cids = np.arange(len(cmat), dtype=np.int64)
     else:
-        stride = centroid_stride or max(
-            1, (n_docs if n_docs is not None else df.count())
-            // n_centroids)
+        stride = max(1, (n_docs if n_docs is not None else df.count())
+                     // n_centroids)
         # deterministic hash-based sample: `id % stride` assumes dense
         # 0-based ids and selects nothing on sparse/offset id spaces;
         # hashing is position- and density-independent, needs no global
@@ -342,18 +351,7 @@ def ivf_topk(
             .filter(F.col("query_id") != F.col("nbr_id"))
             .select("query_id", "nbr_id")
             .distinct())
-    qv = df.select(F.col(id_col).alias("query_id"),
-                   F.col(vec_col).alias("query_vec"))
-    nv = df.select(F.col(id_col).alias("nbr_id"),
-                   F.col(vec_col).alias("nbr_vec"))
-    scored = (cand.join(qv, "query_id").join(nv, "nbr_id")
-              .withColumn("score", F.round(
-                  _cosine_batch(F.col("query_vec"), F.col("nbr_vec")), 6)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", "score", "rank"))
+    return _top_k(cand, df, k, id_col=id_col, vec_col=vec_col)
 
 
 def embedding_near_duplicates(
@@ -363,19 +361,25 @@ def embedding_near_duplicates(
     """Embedding-cosine near-dup pairs (id_a < id_b) above threshold,
     via the LSH candidate path; vectors join in after the id dedup
     (the planner picks broadcast or shuffle joins by the vector
-    table's size)."""
+    table's size).
+
+    NULL and all-zero vectors take no part: they score 0.0 against
+    everything, and the sign hash sends every one of them to the same
+    bucket in every table, where they would pair with each other
+    quadratically (the dedup module's degenerate-input rule). Raises
+    ``ValueError`` at call time, before any job runs, unless
+    ``0 < threshold <= 1`` — at a threshold ≤ 0 the excluded pairs
+    would have qualified."""
+    if not 0 < threshold <= 1:
+        raise ValueError("embedding_near_duplicates: threshold must be "
+                         f"in (0, 1], got {threshold}")
+    live = df.filter(F.exists(F.col(vec_col), lambda x: x != 0))
     pairs = _candidate_id_pairs(
-        df, id_col=id_col, vec_col=vec_col, dim=dim,
+        live, id_col=id_col, vec_col=vec_col, dim=dim,
         n_tables=n_tables, n_bits=n_bits, symmetric=True)
-    va = df.select(F.col(id_col).alias("id_a"),
-                   F.col(vec_col).alias("vec_a"))
-    vb = df.select(F.col(id_col).alias("id_b"),
-                   F.col(vec_col).alias("vec_b"))
-    return (pairs.join(va, "id_a").join(vb, "id_b")
-            .withColumn("score", F.round(
-                _cosine_batch(F.col("vec_a"), F.col("vec_b")), 6))
-            .filter(F.col("score") >= threshold)
-            .select("id_a", "id_b", "score"))
+    return (_scored(pairs, df, "id_a", "id_b", id_col=id_col,
+                    vec_col=vec_col)
+            .filter(F.col("score") >= threshold))
 
 
 def semantic_dedup(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from .assemble import EVENT_FIELDS
 
 # ISO-8601 with explicit offset, the pipeline's canonical date string
-# (functions/dates.py formats "2024-07-26T04:18:34-07:00")
+# (operators/parse.py formats "2024-07-26T04:18:34-07:00")
 _ISO_OFFSET_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
 # index-map-template.json:5-18 → Spark types

@@ -72,7 +72,7 @@ def test_minhash_lsh_finds_planted_dups(spark, docs):
 
 
 def test_simhash_near_duplicates(spark, docs):
-    out = dedup.simhash_near_duplicates(docs, max_hamming=10)
+    out = dedup.simhash_verified_near_duplicates(docs, threshold=0.5)
     found = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert (0, 1) in found         # identical → hamming 0
     assert (1, 2) in found         # normalized-identical
@@ -150,6 +150,66 @@ def test_embedding_near_duplicates(spark, vecs):
         vecs, dim=4, threshold=0.99, n_tables=8, n_bits=2)
     found = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert (0, 1) in found
+
+
+def test_topk_ties_rank_by_neighbor_id(spark):
+    """The three top-k operators share one re-rank: on positive
+    multiples of one vector every pair is a candidate (one sign bucket,
+    every IVF cell probed) and scores 1.0, so all three return the same
+    rows, the tied neighbours ranked by ascending id."""
+    df = spark.createDataFrame(
+        [(i, [m * 1.0, m * 2.0, m * 0.5]) for i, m in
+         enumerate([3, 1, 4, 1, 5, 9, 2, 6])],
+        "vec_id long, embedding array<double>")
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.select(
+            "query_id", "nbr_id", "score", "rank").collect())
+
+    want = [(q, n, 1.0, r + 1) for q in range(8)
+            for r, n in enumerate([i for i in range(8) if i != q][:3])]
+    assert rows(similarity.brute_force_topk(df, k=3)) == want
+    assert rows(similarity.ann_topk(df, dim=3, k=3, n_tables=2,
+                                    n_bits=1)) == want
+    assert rows(similarity.ivf_topk(df, k=3, n_centroids=4,
+                                    n_probe=4)) == want
+
+
+def test_embedding_near_duplicates_skips_degenerate_vectors(spark,
+                                                            monkeypatch):
+    """NULL and all-zero vectors share one sign bucket in every table;
+    they must not reach candidate generation (n of them would make
+    n(n-1)/2 pairs that can never pass the threshold)."""
+    rows = ([(i, None) for i in range(6)]
+            + [(6 + i, [0.0, 0.0, 0.0, 0.0]) for i in range(4)]
+            + [(10, [1.0, 0.0, 0.0, 0.0]), (11, [0.999, 0.01, 0.0, 0.0]),
+               (12, [0.0, 1.0, 0.0, 0.0])])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    seen = []
+    orig = similarity._candidate_id_pairs
+
+    def spy(*a, **k):
+        pairs = orig(*a, **k)
+        seen.extend(tuple(r) for r in pairs.collect())
+        return pairs
+
+    monkeypatch.setattr(similarity, "_candidate_id_pairs", spy)
+    out = similarity.embedding_near_duplicates(
+        df, dim=4, threshold=0.9, n_tables=4, n_bits=2).collect()
+    assert {(r["id_a"], r["id_b"]) for r in out} == {(10, 11)}
+    assert (10, 11) in seen
+    assert not [p for p in seen if min(p) < 10], seen
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5, 1.5])
+def test_embedding_near_duplicates_rejects_threshold_before_any_job(
+        spark, vecs, threshold):
+    def call():
+        with pytest.raises(ValueError, match="threshold must be in"):
+            similarity.embedding_near_duplicates(vecs, dim=4,
+                                                 threshold=threshold)
+
+    assert not _jobs_run_by(spark, call)
 
 
 def test_textstats_basics(spark):

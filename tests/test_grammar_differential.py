@@ -1,7 +1,7 @@
-"""Differential test: the retired pure-Catalyst grammar path
-(functions/grammar.py, kept as the JVM-side reference implementation)
-must agree with the production Arrow-vectorized grok
-(operators/parse.py) on every line class and on the date rule."""
+"""Differential tests: the production Arrow-vectorized grok
+(operators/parse.py) must agree with the reference forms in
+``grok_reference`` — the pandas grok and the pure-Catalyst grammar with
+its JVM date rule — on every line class and on the date rule."""
 
 from __future__ import annotations
 
@@ -9,9 +9,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+import grok_reference
 from log_ship_elastic_postfix_spark import datagen
-from log_ship_elastic_postfix_spark.functions import grammar
-from log_ship_elastic_postfix_spark.functions.dates import normalize_syslog_date
 from log_ship_elastic_postfix_spark.operators.parse import (PARSED_FIELDS,
                                                             parse_lines)
 from log_ship_elastic_postfix_spark.sources.pages import pages_to_lines
@@ -47,10 +46,10 @@ def test_catalyst_and_pandas_grok_agree(spark):
 
     pandas_side = parse_lines(lines, now=NOW).parsed
 
-    env = grammar.apply_grammar(lines, line_col="line")
+    env = grok_reference.apply_grammar(lines, line_col="line")
     envelope_ok = F.col("prog").isNotNull() & (F.col("prog") != "")
-    prog_ok = F.col("prog").rlike(grammar.PROG_FILTER_RE)
-    date = normalize_syslog_date(
+    prog_ok = F.col("prog").rlike(grok_reference.PROG_FILTER_RE)
+    date = grok_reference.normalize_syslog_date(
         F.col("_mon"), F.col("_day"), F.col("_hh"), F.col("_mi"),
         F.col("_ss"), tz="America/Phoenix", now=NOW)
     catalyst_side = (

@@ -559,8 +559,7 @@ def test_ivf_trained_centroids(spark):
 
 
 def test_ivf_n_docs_skips_count(spark, monkeypatch):
-    """Passing n_docs (or centroid_stride) must not run the sizing
-    df.count() job."""
+    """Passing n_docs must not run the sizing df.count() job."""
     from log_ship_elastic_postfix_spark.operators import similarity
 
     df = spark.createDataFrame(
@@ -671,7 +670,7 @@ def test_try_pil_probe_is_cached(monkeypatch):
 
 # ----------------------------------- dedup: no persisted-frame leaks
 def test_verify_paths_unpersist(spark, monkeypatch):
-    """jaccard_pairs / simhash_near_duplicates must not leak cached
+    """The minhash and simhash verify paths must not leak cached
     shingle/simhash frames (ADVICE finding): every DataFrame.persist()
     made inside the verify paths is matched by an unpersist() before
     the call returns."""
@@ -708,5 +707,7 @@ def test_verify_paths_unpersist(spark, monkeypatch):
     assert n_persists >= 3, "tracking must observe the real persists"
     assert not live, "minhash verify leaked a persisted frame"
 
-    dedup.simhash_near_duplicates(docs).count()
+    before = n_persists
+    dedup.simhash_verified_near_duplicates(docs).count()
+    assert n_persists > before, "tracking must observe the simhash persists"
     assert not live, "simhash verify leaked a persisted frame"
